@@ -8609,7 +8609,7 @@ ORACLES: dict[str, str] = {
 #   3. everything else (all driver-evidenced green in r1-r4), with the
 #      five slowest long-tail fixtures parked at the very back.
 # The local artifact (scripts/check_oracles.py --json →
-# CORRECTNESS_local_r05.json) always carries all 162 rows regardless.
+# CORRECTNESS_local_r05.json) always carries all 163 rows regardless.
 _WINDOW_50 = [
     # — §2 core: processors, pipeline, guards, ingest (VERDICT P0-P6g) —
     "ros_pipeline_all", "ros_language", "ros_categories", "ros_sentiment",
@@ -8676,9 +8676,9 @@ _BACK = [
 ]
 
 
-def _rotated(d: dict) -> dict:
+def _rotated(d: dict, window: list[str] = _WINDOW_50) -> dict:
     """Round-5 driver-gate ordering — see the block comment above."""
-    win = set(_WINDOW_50)
+    win = set(window)
     never = [
         k for k in d
         if k not in win and k not in _DRIVER_EVIDENCED
@@ -8688,11 +8688,17 @@ def _rotated(d: dict) -> dict:
         if k not in win and k in _DRIVER_EVIDENCED and k not in _BACK
     ]
     back = [k for k in _BACK if k not in win]
-    order = [*_WINDOW_50, *never, *rest, *back]
-    assert len(_WINDOW_50) == 50 and sorted(order) == sorted(d)
+    order = [*window, *never, *rest, *back]
+    # raise, not assert: the check must survive ``python -O``
+    if len(window) != 50 or sorted(order) != sorted(d):
+        raise ValueError(
+            "rotation window must be 50 registered names, each once: "
+            f"unknown {sorted(set(window) - set(d))}"
+        )
     return {k: d[k] for k in order}
 
 
 QUERIES = _rotated(QUERIES)
 ORACLES = _rotated(ORACLES)
-assert list(QUERIES) == list(ORACLES) and len(QUERIES) == 163
+if list(QUERIES) != list(ORACLES) or len(QUERIES) != 163:
+    raise ValueError("QUERIES and ORACLES must list the same 163 names")

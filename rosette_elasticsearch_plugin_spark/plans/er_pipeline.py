@@ -42,13 +42,13 @@ class ERConfig:
     n_salt: int = 8
     salt_threshold: int = 16
     cc_max_iter: int = 25
-    # opt-in FOURTH blocking family: sorted-neighborhood window (None =
-    # off, the oracle-checked default).  A window of w adds exactly
-    # n·(w−1) linear candidate pairs in canonical-key order — recall
-    # insurance for variants whose leading-character typos break every
-    # key-equality family, at a bounded, skew-free cost
+    # opt-in, batch-only FOURTH blocking family: sorted-neighborhood
+    # window (None = off, the oracle-checked default).  A window of w
+    # adds exactly n·(w−1) linear candidate pairs in canonical-key
+    # order — recall insurance for variants whose leading-character
+    # typos break every key-equality family, at a bounded, skew-free cost
     snm_window: int | None = None
-    # opt-in meta-blocking (None = off): when set, candidate generation
+    # opt-in, batch-only meta-blocking (None = off): candidate generation
     # becomes the weighted co-occurrence graph of
     # resolution/metablocking.py — blocks purged at max_block_size,
     # pairs kept when their common-blocks Jaccard ≥ meta_tau.  Pair
@@ -135,6 +135,14 @@ def name_match_edges(
         pairs = pairs.unionByName(
             sorted_neighborhood_pairs(keyed, cfg.snm_window)
         ).distinct()
+    return names, _pair_edges(pairs, keyed, cfg)
+
+
+def _pair_edges(pairs: DataFrame, keyed: DataFrame, cfg: ERConfig) -> DataFrame:
+    """Candidate pairs (node_a, node_b) → matched edges: the one
+    score-and-threshold tail that batch (``name_match_edges``), fold
+    and retract (``plans/incremental.py``) share.  ``keyed`` is
+    (node, key) over every pair node."""
     # hoist the canonical key out of the scorer: join the PREcomputed
     # key back per pair side so the transliteration replace-chain runs
     # once per NAME (in `keyed`), not twice per candidate pair.  The
@@ -153,8 +161,7 @@ def name_match_edges(
         key_a=F.col("key_a"),
         key_b=F.col("key_b"),
     )
-    edges = match_edges(scored, cfg.scoring)
-    return names, edges
+    return match_edges(scored, cfg.scoring)
 
 
 def resolve_names(
@@ -165,10 +172,7 @@ def resolve_names(
     """(node) distinct normalized names → (node, cluster).  cluster =
     lexicographic min node in the connected component; singletons map
     to themselves."""
-    names, edges = name_match_edges(names, cfg)
-    return connected_components(
-        edges, nodes=names, max_iter=cfg.cc_max_iter, stats=cc_stats
-    )
+    return resolve_names_with_overrides(names, cfg=cfg, cc_stats=cc_stats)
 
 
 def _override_pairs_df(spark, pairs) -> DataFrame:

@@ -7,14 +7,22 @@ pair scoring over the whole vocabulary; incremental resolution pays
 only for pairs that involve a new name:
 
   1. delta      = new names not in the prior state (anti-join);
-  2. blocking   re-keys the combined vocabulary (per-name, cheap —
-     blocking is vocabulary-scale, not document-scale);
-  3. candidates are filtered to pairs with ≥1 NEW side before the
-     Arrow-batched scoring hop — old×old pairs, the quadratic bulk,
-     are never re-scored;
+  2. blocking   keys only the delta (``extend_name_index`` appends it
+     to the persisted name index);
+  3. candidates come from the blocks the delta touches and are
+     filtered to pairs with ≥1 NEW side before the Arrow-batched
+     scoring hop — old×old pairs, the quadratic bulk, are never
+     re-scored;
   4. the prior clustering enters the graph as star edges
      (node → its cluster id), and hash-min connected components runs
      over star ∪ new-edges.
+
+Fold and retract share the index builder, the touched-block pair grid
+(``_touched_pairs``) and the batch plan's key join-back → score →
+threshold edge builder (``er_pipeline._pair_edges``).  They pair only
+inside index blocks, so the batch-only ``ERConfig.snm_window`` and
+``ERConfig.meta_tau`` raise ``ValueError`` instead of silently
+diverging from the batch result.
 
 Equivalence to a full recompute (tested in tests/test_incremental.py,
 oracle-checked in the driver): components depend only on connectivity,
@@ -34,8 +42,10 @@ from pyspark.sql import DataFrame, functions as F
 from ..resolution.blocking import all_blocks
 from ..resolution.clustering import connected_components
 from ..resolution.pairs import candidate_pairs
-from ..resolution.scoring import match_edges, score_pairs
-from .er_pipeline import ERConfig, er_key_col
+# not called here (er_pipeline._pair_edges scores); kept as module
+# globals because erbench's tracer patches layer functions per module
+from ..resolution.scoring import match_edges, score_pairs  # noqa: F401
+from .er_pipeline import ERConfig, _pair_edges, er_key_col
 
 
 def extend_name_index(
@@ -86,6 +96,46 @@ def extend_name_index(
     return out.localCheckpoint(eager=False)
 
 
+def _reject_batch_only(cfg: ERConfig) -> None:
+    """Fold and retract pair only inside name-index blocks, so they
+    cannot reproduce the batch-only candidate families: fail loudly
+    rather than diverge from the batch result."""
+    if cfg.snm_window or cfg.meta_tau is not None:
+        opt = "snm_window" if cfg.snm_window else "meta_tau"
+        raise ValueError(
+            f"ERConfig.{opt} is batch-only; fold and retract reject it"
+        )
+
+
+def _touched_pairs(
+    index: DataFrame, seed: DataFrame, cfg: ERConfig
+) -> tuple[DataFrame, DataFrame]:
+    """(pairs, keyed) over the blocks of ``index`` (node, key,
+    block_key) that a ``seed`` node touches — the pair grid fold and
+    retract share.  Touched blocks keep ALL their index members, so
+    every cap/salt size decision matches the full recompute for each
+    block that can produce a pair involving a seed node.  The slice is
+    materialized ONCE — candidate_pairs references its input several
+    times, and the per-pair key join-backs read the same slice, so
+    nothing downstream scans the vocabulary-scale index again
+    (measured numbers: BENCH.md §3)."""
+    touched_keys = (
+        index.join(seed, "node", "left_semi").select("block_key").distinct()
+    )
+    touched = index.join(touched_keys, "block_key", "left_semi").localCheckpoint(
+        eager=False
+    )
+    pairs = candidate_pairs(
+        touched.select("node", "block_key"),
+        cfg.max_block_size,
+        cfg.n_salt,
+        cfg.salt_threshold,
+    )
+    # every pair node is a touched-block member, so the key dim of the
+    # join-back is the touched slice, not the vocabulary
+    return pairs, touched.select("node", "key").dropDuplicates(["node"])
+
+
 def incremental_resolve(
     prior_clusters: DataFrame,
     new_names: DataFrame,
@@ -105,6 +155,7 @@ def incremental_resolve(
     Without it, the combined vocabulary is re-keyed in place (exact
     same result — blocking is a pure per-name function).
     """
+    _reject_batch_only(cfg)
     old_nodes = prior_clusters.select("node")
     delta = (
         new_names.select(F.col(new_names.columns[0]).alias("node"))
@@ -113,54 +164,16 @@ def incremental_resolve(
     )
     all_names = old_nodes.unionByName(delta).localCheckpoint(eager=True)
 
-    if name_index is not None:
-        index = name_index.select("node", "key", "block_key")
-    else:
-        keyed_all = all_names.select(
-            "node", er_key_col(F.col("node"), cfg.alias_names).alias("key")
-        )
-        index = (
-            all_blocks(keyed_all, cfg.blocking)
-            .join(keyed_all, "node")
-            .select("node", "key", "block_key")
-            .localCheckpoint(eager=False)
-        )
+    index = (
+        name_index.select("node", "key", "block_key")
+        if name_index is not None
+        else extend_name_index(None, all_names, cfg)
+    )
     # restrict the pair grid to blocks the delta TOUCHES: a pair with
     # ≥1 new side can only come from a block containing a new node, so
     # untouched (old-only) blocks — the vocabulary-scale bulk — never
-    # enter the self-join at all.  Touched blocks keep ALL their
-    # members, so cap/salt size decisions match the full recompute for
-    # every block that can produce a kept pair (exactness: the kept
-    # pairs after the ≥1-new-side filter below are identical).  The
-    # touched slice is materialized ONCE — candidate_pairs references
-    # its input several times, and the per-pair key join-backs read the
-    # same slice, so nothing downstream of this point scans the
-    # vocabulary-scale index again (measured numbers: BENCH.md §3).
-    touched_keys = (
-        index.join(delta, "node", "left_semi")
-        .select("block_key")
-        .distinct()
-    )
-    touched = index.join(touched_keys, "block_key", "left_semi").localCheckpoint(
-        eager=False
-    )
-    pairs = candidate_pairs(
-        touched.select("node", "block_key"),
-        cfg.max_block_size,
-        cfg.n_salt,
-        cfg.salt_threshold,
-    )
-    # precomputed-key join-back (translit once per name, not per pair);
-    # every pair node is a touched-block member, so the key dim is the
-    # touched slice, not the vocabulary
-    keyed = touched.select("node", "key").dropDuplicates(["node"])
-    pairs = pairs.join(
-        keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a")),
-        "node_a",
-    ).join(
-        keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b")),
-        "node_b",
-    )
+    # enter the self-join at all
+    pairs, keyed = _touched_pairs(index, delta, cfg)
     # keep only pairs with at least one new side — BEFORE the scoring
     # hop, so the Python/Arrow cost is delta-proportional
     old_flag = prior_clusters.select(
@@ -182,13 +195,7 @@ def incremental_resolve(
         .where(F.col("__old_a").isNull() | F.col("__old_b").isNull())
         .drop("__old_a", "__old_b")
     )
-    scored = score_pairs(
-        p,
-        cfg=cfg.scoring,
-        key_a=F.col("key_a"),
-        key_b=F.col("key_b"),
-    )
-    new_edges = match_edges(scored, cfg.scoring).select("node_a", "node_b")
+    new_edges = _pair_edges(p, keyed, cfg).select("node_a", "node_b")
     star = prior_clusters.where(F.col("node") != F.col("cluster")).select(
         F.col("node").alias("node_a"), F.col("cluster").alias("node_b")
     )
@@ -264,6 +271,7 @@ def retract_names(
     clusters table; the block-size aggregates below are single
     groupBy passes over it, never self-joins.
     """
+    _reject_batch_only(cfg)
     prior_nodes = prior_clusters.select("node")
     removed = (
         removed_names.select(
@@ -276,19 +284,13 @@ def retract_names(
     remaining = prior_clusters.join(removed, "node", "left_anti")
 
     if name_index is not None:
-        index = name_index.select("node", "key", "block_key").join(
-            prior_nodes, "node", "left_semi"
+        index = (
+            name_index.select("node", "key", "block_key")
+            .join(prior_nodes, "node", "left_semi")
+            .localCheckpoint(eager=False)
         )
     else:
-        keyed = prior_nodes.select(
-            "node", er_key_col(F.col("node")).alias("key")
-        )
-        index = (
-            all_blocks(keyed, cfg.blocking)
-            .join(keyed, "node")
-            .select("node", "key", "block_key")
-        )
-    index = index.localCheckpoint(eager=False)
+        index = extend_name_index(None, prior_nodes, cfg)
     rem_index = index.join(removed, "node", "left_anti").localCheckpoint(
         eager=False
     )
@@ -330,37 +332,13 @@ def retract_names(
     # the true remaining-universe size for every cap/salt decision;
     # pairs are then narrowed to both-sides-affected BEFORE the Arrow
     # scoring hop (cross pairs are provably sub-threshold, see above)
-    touched_keys = (
-        rem_index.join(affected, "node", "left_semi")
-        .select("block_key")
-        .distinct()
-    )
-    touched = rem_index.join(
-        touched_keys, "block_key", "left_semi"
-    ).localCheckpoint(eager=False)
-    pairs = candidate_pairs(
-        touched.select("node", "block_key"),
-        cfg.max_block_size,
-        cfg.n_salt,
-        cfg.salt_threshold,
-    )
+    pairs, keyed = _touched_pairs(rem_index, affected, cfg)
     pairs = pairs.join(
         affected.withColumnRenamed("node", "node_a"), "node_a", "left_semi"
     ).join(
         affected.withColumnRenamed("node", "node_b"), "node_b", "left_semi"
     )
-    keyed = touched.select("node", "key").dropDuplicates(["node"])
-    pairs = pairs.join(
-        keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a")),
-        "node_a",
-    ).join(
-        keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b")),
-        "node_b",
-    )
-    scored = score_pairs(
-        pairs, cfg=cfg.scoring, key_a=F.col("key_a"), key_b=F.col("key_b")
-    )
-    edges = match_edges(scored, cfg.scoring).select("node_a", "node_b")
+    edges = _pair_edges(pairs, keyed, cfg).select("node_a", "node_b")
     sub = connected_components(edges, nodes=affected, max_iter=cfg.cc_max_iter)
     return untouched.select("node", "cluster").unionByName(
         sub.select("node", "cluster")

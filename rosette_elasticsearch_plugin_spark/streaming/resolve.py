@@ -28,10 +28,11 @@ as the next snapshot, so:
   streaming path DuckDB-oracle-checkable (``stream_incremental_resolve``).
 
 At the 10^12-doc design point this is the daily shape: the delta
-streams in, per-batch cost is delta-proportional (blocking re-keys the
-vocabulary — names-scale, not documents-scale — and only pairs with a
-new side reach the Arrow scoring hop), and the committed state is the
-same bucketed snapshot table the search path serves from.
+streams in, per-batch cost is delta-proportional (blocking keys only
+the delta's new names — ``extend_name_index`` appends them to the
+committed name index — and only pairs with a new side reach the Arrow
+scoring hop), and the committed state is the same bucketed snapshot
+table the search path serves from.
 """
 
 from __future__ import annotations

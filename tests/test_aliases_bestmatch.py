@@ -141,6 +141,36 @@ def test_alias_cfg_flows_through_search_and_incremental(spark):
     got = {r["node"]: r["cluster"] for r in inc.collect()}
     assert got["billy whitfield"] == got["william whitfield"]
 
+    # retraction re-keys with the same alias rewrite: deleting the
+    # formal names must leave the nickname variants linked, exactly as
+    # the batch recompute over the remaining names links them — with
+    # and without a persisted name index
+    from rosette_elasticsearch_plugin_spark.plans.incremental import (
+        extend_name_index,
+        retract_names,
+    )
+
+    families = {
+        "whitfield": ["william", "billy", "bill", "will"],
+        "lindqvist": ["robert", "bob", "bobby", "rob"],
+        "moreau": ["elizabeth", "liz", "beth", "betty"],
+    }
+    all_names = [f"{g} {s}" for s, gs in families.items() for g in gs]
+    formal = [f"{gs[0]} {s}" for s, gs in families.items()]
+    names = spark.createDataFrame([(n,) for n in all_names], "node string")
+    removed = spark.createDataFrame([(n,) for n in formal], "node string")
+    prior = resolve_names(names, cfg)
+    want = {
+        r["node"]: r["cluster"]
+        for r in resolve_names(
+            names.join(removed, "node", "left_anti"), cfg
+        ).collect()
+    }
+    assert len(set(want.values())) == 3  # one cluster per family
+    for index in (None, extend_name_index(None, names, cfg)):
+        got = retract_names(prior, removed, cfg, name_index=index)
+        assert {r["node"]: r["cluster"] for r in got.collect()} == want
+
 
 def _clusters(spark, scored_rows, mutual):
     scored = spark.createDataFrame(

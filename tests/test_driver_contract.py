@@ -4,6 +4,8 @@ guards against regressions in pytest)."""
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 from __spark_entry__ import oracle_sql, queries
@@ -230,3 +232,17 @@ def test_entry_smoke(spark):
     df = entry(spark)
     assert df.count() > 0
     assert df.columns == ["doc_id", "mention_id", "surface", "normalized", "cluster"]
+
+
+def test_registry_window_typo_raises():
+    """The registry ordering check raises ValueError (it must not
+    vanish under ``python -O`` like an ``assert``) when the 50-name
+    window carries a name the registry does not have."""
+    from rosette_elasticsearch_plugin_spark.plans import driver_queries as dq
+
+    typo = ["er_clsuters" if k == "er_clusters" else k for k in dq._WINDOW_50]
+    with pytest.raises(ValueError, match="er_clsuters"):
+        dq._rotated(dq.QUERIES, typo)
+    with pytest.raises(ValueError, match="window"):
+        dq._rotated(dq.QUERIES, dq._WINDOW_50[:49])
+    assert list(dq._rotated(dq.QUERIES)) == list(dq.QUERIES)

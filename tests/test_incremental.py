@@ -1,5 +1,6 @@
 """Incremental resolution ≡ batch resolution (plans/incremental.py)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from rosette_elasticsearch_plugin_spark import corpus
@@ -293,3 +294,34 @@ def test_retract_with_persisted_index(spark):
     with_index = _clusters_dict(retract_names(prior, removed, name_index=index))
     without = _clusters_dict(retract_names(prior, removed))
     assert with_index == without
+
+
+@pytest.mark.parametrize("op", ["fold", "retract"])
+@pytest.mark.parametrize(
+    "opt", [{"snm_window": 2}, {"meta_tau": 0.5}], ids=["snm", "meta"]
+)
+def test_batch_only_options_raise(spark, op, opt):
+    """Fold and retract pair only inside name-index blocks, so a
+    batch-only candidate family would silently split what batch merges
+    (exact-only blocking + snm_window=2: batch links "dan aykroyd jr"
+    to "dan aykroyd", a fold left it a singleton).  Loud error instead."""
+    from rosette_elasticsearch_plugin_spark.plans.er_pipeline import ERConfig
+    from rosette_elasticsearch_plugin_spark.plans.incremental import (
+        retract_names,
+    )
+    from rosette_elasticsearch_plugin_spark.resolution.blocking import (
+        BlockingConfig,
+    )
+
+    cfg = ERConfig(
+        blocking=BlockingConfig(use_metaphone=False, use_minhash=False),
+        **opt,
+    )
+    prior = spark.createDataFrame(
+        [("dan aykroyd", "dan aykroyd"), ("vladimir putin", "vladimir putin")],
+        "node string, cluster string",
+    )
+    delta = spark.createDataFrame([("dan aykroyd jr",)], "node string")
+    fn = incremental_resolve if op == "fold" else retract_names
+    with pytest.raises(ValueError, match=next(iter(opt))):
+        fn(prior, delta, cfg)
