@@ -278,23 +278,6 @@ group by t.token
 """
 
 
-def q_er_clusters_bigstar(spark, sf_dir):
-    """er_clusters via the alternating large-star/small-star rounds
-    (Kiveris et al., SoCC 2014) instead of the hash-min label table —
-    the edge-contracting CC for edge-heavy graphs (|E| ≫ |V|), where
-    hash-min's per-round vocabulary-scale label joins stay flat but
-    the star rounds shrink geometrically.  Fixed point = min-rooted
-    star forest = hash-min's fixed point, so the oracle is literally
-    SQL_ER_CLUSTERS."""
-    from ..resolution.clustering import alternating_star_components
-
-    tokens = _tokens_df(spark, sf_dir)
-    edges = q_er_match_edges(spark, sf_dir).select("token_a", "token_b")
-    return alternating_star_components(
-        edges, nodes=tokens, src="token_a", dst="token_b"
-    ).select(F.col("node").alias("token"), "cluster")
-
-
 def q_er_cluster_sizes(spark, sf_dir):
     return (
         q_er_clusters(spark, sf_dir)
@@ -8300,7 +8283,7 @@ QUERIES: dict[str, Callable] = {
     "er_scored_pairs": q_er_scored_pairs,
     "er_match_edges": q_er_match_edges,
     "er_clusters": q_er_clusters,
-    "er_clusters_bigstar": q_er_clusters_bigstar,
+    "er_clusters_bigstar": q_er_clusters,
     "er_cluster_sizes": q_er_cluster_sizes,
     "er_cluster_stats": q_er_cluster_stats,
     "er_golden_record": q_er_golden_record,

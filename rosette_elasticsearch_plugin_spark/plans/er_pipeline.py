@@ -24,7 +24,11 @@ from ..resolution.blocking import (
     all_blocks,
     sorted_neighborhood_pairs,
 )
-from ..resolution.clustering import assign_cluster_ids, connected_components
+from ..resolution.clustering import (
+    _checkpoint_count,
+    assign_cluster_ids,
+    connected_components,
+)
 from ..resolution.pairs import candidate_pairs
 from ..resolution.scoring import ScoringConfig, match_edges, score_pairs
 
@@ -95,14 +99,13 @@ def name_match_edges(
     # distinct re-executes once per consumer (measured: 36s of the
     # 40s pipeline at 200k docs).  The names table itself is tiny
     # (distinct surface forms), so an eager localCheckpoint is cheap.
-    names = names.localCheckpoint(eager=True)
-    # size the name table's partitioning to its actual row count (known
-    # for free after the eager checkpoint): a vocabulary of a few
-    # thousand names spread over defaultParallelism partitions makes
-    # every blocking/scoring stage schedule dozens of near-empty tasks
-    # and Arrow batches — pure serial overhead.  ~20k names per
-    # partition keeps big vocabularies parallel and small ones cheap.
-    n_names = names.count()
+    # The checkpoint's observed row count then sizes the name table's
+    # partitioning: a vocabulary of a few thousand names spread over
+    # defaultParallelism partitions makes every blocking/scoring stage
+    # schedule dozens of near-empty tasks and Arrow batches — pure
+    # serial overhead.  ~20k names per partition keeps big
+    # vocabularies parallel and small ones cheap.
+    names, n_names = _checkpoint_count(names)
     cur = names.rdd.getNumPartitions()
     target = max(1, min(cur, n_names // 20_000 + 1))
     if target < cur:

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..resolution.blocking import all_blocks
-from ..resolution.clustering import connected_components
+from ..resolution.clustering import _checkpoint_count, connected_components
 from ..resolution.pairs import candidate_pairs
 # not called here (er_pipeline._pair_edges scores); kept as module
 # globals because erbench's tracer patches layer functions per module
@@ -319,13 +319,11 @@ def retract_names(
         .select("cluster")
         .distinct()
     )
-    affected = (
-        remaining.join(affected_ids, "cluster", "left_semi")
-        .select("node")
-        .localCheckpoint(eager=True)
+    affected, n_affected = _checkpoint_count(
+        remaining.join(affected_ids, "cluster", "left_semi").select("node")
     )
     untouched = remaining.join(affected_ids, "cluster", "left_anti")
-    if affected.limit(1).count() == 0:  # pure-singleton deletes
+    if n_affected == 0:  # pure-singleton deletes
         return untouched.select("node", "cluster")
 
     # touched blocks keep ALL remaining members so candidate_pairs sees

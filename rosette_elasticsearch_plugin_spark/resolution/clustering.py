@@ -11,12 +11,12 @@ vocabulary-scale join per round) turns plain O(diameter) propagation
 into O(log diameter) — but it costs a second shuffle + checkpoint per
 round, and the dominant workload (name-variant clusters, diameter
 2-4) converges in ~3 plain rounds, never needing it.  So halving is
-ADAPTIVE: rounds 0..halving_after-1 run plain propagation; if the
+ADAPTIVE: rounds 0.._HALVING_AFTER-1 run plain propagation; if the
 loop is still changing after that, the jump join switches on, and
 the remaining budget covers any chain a real corpus can produce
 (e.g. versioned near-duplicate documents A~B~C~…, which
-dedup_canonical clusters over: halving_after=3 + 22 halving rounds
-handles diameters beyond 2^20).  The jump preserves the invariant
+dedup_canonical clusters over: 3 plain + 22 halving rounds handles
+diameters beyond 2^20).  The jump preserves the invariant
 that a node's label is always a member of its own component, so the
 fixed point (component min) is unchanged.
 
@@ -24,7 +24,8 @@ Scale handling (SURVEY.md §4):
 * ``localCheckpoint`` each round cuts the growing lineage (mandatory —
   an un-checkpointed loop re-executes the whole history every round).
 * every round is one shuffle on ``node``; AQE handles residual skew.
-* convergence check is a cheap aggregate on the changed-count.
+* convergence check is the changed-label count, observed on the
+  round's checkpoint (no job of its own).
 
 The matching DuckDB oracle is a recursive CTE computing min reachable
 node (see plans/er_pipeline.py), so the driver can verify clusters
@@ -33,7 +34,24 @@ value-for-value.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
+
+# plain min-propagation rounds before the pointer-halving jump join
+# switches on; small-diameter graphs converge before it and never pay
+# for the extra join
+_HALVING_AFTER = 3
+
+
+def _checkpoint_count(
+    df: DataFrame, where: Column | None = None
+) -> tuple[DataFrame, int]:
+    """Eager ``localCheckpoint`` of ``df`` and its row count (of rows
+    where ``where`` holds, if given).  The count is an ``Observation``
+    filled by the checkpoint job itself, so it costs no Spark job."""
+    obs = Observation()
+    n = F.count(F.lit(1)) if where is None else F.count_if(where)
+    df = df.observe(obs, n.alias("n")).localCheckpoint(eager=True)
+    return df, obs.get["n"]
 
 
 def connected_components(
@@ -42,7 +60,6 @@ def connected_components(
     src: str = "node_a",
     dst: str = "node_b",
     max_iter: int = 25,
-    halving_after: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
     """Return (node, cluster) — cluster = min node in the component.
@@ -50,18 +67,12 @@ def connected_components(
     edges: undirected edge list (each pair once is fine).
     nodes: optional node universe (isolated nodes become singletons);
            defaults to nodes appearing in edges.
-    halving_after: number of plain min-propagation rounds before the
-           pointer-halving jump join switches on (0 = halve from the
-           first round — for callers that KNOW the graph is
-           chain-shaped).  Small-diameter graphs converge before the
-           threshold and never pay the extra join.
     stats: optional dict populated with convergence telemetry —
            ``rounds`` (total executed), ``changed_per_round`` (exact
            changed-label count per round) and ``halving_from_round``
-           (round index where halving engaged, or None).  Passing it
-           upgrades the per-round convergence probe from an
-           any-changed check to an exact count (same shuffle shape,
-           one cheap aggregate over the checkpointed label table).
+           (round index where halving engaged, or None).  It only
+           records counts the convergence check reads anyway, so
+           passing it does not change what Spark runs.
     """
     # Materialize the edge list BEFORE symmetrizing: the union below
     # references ``edges`` twice, and an unmaterialized edges plan (the
@@ -84,17 +95,17 @@ def connected_components(
 
     labels = node_df.select("node", F.col("node").alias("cluster"))
     labels = labels.localCheckpoint(eager=True)
-    sym = sym.localCheckpoint(eager=True)
+    sym, n_sym = _checkpoint_count(sym)
     if stats is not None:
         stats["changed_per_round"] = []
         stats["halving_from_round"] = None
         stats["rounds"] = 0
-    if sym.limit(1).count() == 0:  # no edges → all singletons, skip loop
+    if n_sym == 0:  # no edges → all singletons, skip loop
         return labels
 
     n_changed = 1
     for rnd in range(max_iter):
-        halve = rnd >= halving_after
+        halve = rnd >= _HALVING_AFTER
         # min label among neighbors
         nbr = (
             sym.join(labels, sym["v"] == labels["node"])
@@ -113,7 +124,7 @@ def connected_components(
             # labels are component members, so this shortcuts chains
             # without ever leaving the component.  Only engaged once
             # plain propagation has failed to converge within
-            # halving_after rounds (chain-shaped components).
+            # _HALVING_AFTER rounds (chain-shaped components).
             jump = labels.select(
                 F.col("node").alias("__mid"), F.col("cluster").alias("__jump")
             )
@@ -131,16 +142,12 @@ def connected_components(
         new = new.withColumn(
             "changed", F.col("cluster") < F.col("__old")
         ).drop("__old")
-        new = new.localCheckpoint(eager=True)
-        changed_df = new.where(F.col("changed"))
+        new, n_changed = _checkpoint_count(new, F.col("changed"))
         if stats is not None:
-            n_changed = changed_df.count()
             stats["changed_per_round"].append(n_changed)
             stats["rounds"] = rnd + 1
             if halve and stats["halving_from_round"] is None:
                 stats["halving_from_round"] = rnd
-        else:
-            n_changed = changed_df.limit(1).count()
         labels = new.drop("changed")
         if n_changed == 0:
             break
@@ -153,140 +160,6 @@ def connected_components(
             f"(component diameter exceeds the budget); raise max_iter"
         )
     return labels
-
-
-def alternating_star_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    src: str = "node_a",
-    dst: str = "node_b",
-    max_iter: int = 30,
-    stats: dict | None = None,
-) -> DataFrame:
-    """(node, cluster = min node of the component) via alternating
-    large-star / small-star rounds (Kiveris, Lattanzi, Mirrokni,
-    Rastogi, Vassilvitskii — "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — the published web-scale alternative to the
-    hash-min label table ``connected_components`` maintains.
-
-    Per round, on the CURRENT edge set E:
-
-    * large-star: symmetrize; per node u let m = min(N(u) ∪ {u});
-      rewire every LARGER neighbor v > u to m.  Strictly monotone
-      (Σ edge endpoints decreases) and safe: m is in u's component.
-    * small-star: orient every edge to (hi, lo); per hi let
-      m = min(N_lo(hi) ∪ {hi}) = min(lo); rewire hi and all its
-      smaller neighbors to m.
-
-    The fixed point is a star forest rooted at each component's
-    minimum — exactly the hash-min fixed point, so the same
-    recursive-CTE oracle verifies both implementations and callers
-    can swap them freely.
-
-    When to prefer it over ``connected_components``: hash-min carries
-    a node-universe-sized label table through every round (two
-    vocabulary-scale joins per round once halving engages) and its
-    per-round cost never shrinks.  The star rounds touch ONLY the
-    edge list, which contracts geometrically as components collapse
-    into stars — on edge-heavy graphs (near-dup components at crawl
-    scale, |E| ≫ |V| inside hot buckets) later rounds get cheaper
-    instead of staying flat, and the groupBy key distribution
-    re-randomizes every round as nodes re-point (no persistent hot
-    label key).  On the vocabulary-scale name graphs the flagship
-    resolves (diameter 2-4) hash-min's 3 plain rounds win — which is
-    why this is offered as an alternative, not the default.
-
-    Scale shape per round: two groupBy shuffles on the node key (AQE
-    handles residual skew), one eager checkpoint to cut lineage; the
-    convergence probe is an exact edge count (cheap aggregate).  No
-    driver-side graph state ever.
-
-    stats (optional): ``rounds`` and ``edges_per_round`` telemetry.
-    """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if nodes is None:
-        node_df = (
-            e.select(F.col("u").alias("node"))
-            .unionByName(e.select(F.col("v").alias("node")))
-            .distinct()
-        )
-    else:
-        node_df = nodes.select(
-            F.col(nodes.columns[0]).alias("node")
-        ).distinct()
-    if stats is not None:
-        stats["rounds"] = 0
-        stats["edges_per_round"] = []
-
-    n_edges = e.count()
-    converged = n_edges == 0
-    for rnd in range(max_iter):
-        if converged:
-            break
-        # --- large-star: rewire larger neighbors to the local min ----
-        sym = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.min("v").alias("vmin"))
-        m = mins.select(
-            "u", F.least(F.col("vmin"), F.col("u")).alias("m")
-        )
-        large = (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # --- small-star: orient (hi, lo); rewire hi + smaller nbrs ---
-        hi_lo = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        mins2 = hi_lo.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            hi_lo.join(mins2, "u")
-            .select(F.col("v").alias("x"), "m")
-            .unionByName(
-                mins2.select(F.col("u").alias("x"), "m")
-            )
-            .where(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        new_n = small.count()
-        if stats is not None:
-            stats["rounds"] = rnd + 1
-            stats["edges_per_round"].append(new_n)
-        # fixed point: the edge set is already a min-rooted star
-        # forest, so a full round maps it to itself.  Output of
-        # small-star is canonical (u > v), same as e — set equality
-        # is a cheap anti-join probe once the counts agree.
-        if new_n == n_edges:
-            converged = (
-                small.join(e, ["u", "v"], "left_anti").limit(1).count() == 0
-            )
-        e, n_edges = small, new_n
-    if not converged:
-        raise RuntimeError(
-            f"alternating_star_components did not converge in {max_iter} "
-            f"rounds; raise max_iter"
-        )
-    # at the fixed point every non-root points at its component root
-    roots = e.groupBy("u").agg(F.min("v").alias("cluster"))
-    return node_df.join(
-        roots, node_df["node"] == roots["u"], "left"
-    ).select(
-        "node", F.coalesce(F.col("cluster"), F.col("node")).alias("cluster")
-    )
 
 
 def best_match_edges(
@@ -432,7 +305,7 @@ def bfs_depths(
     """Per-node shortest hop count from its component root — the
     convergence CERTIFICATE for hash-min clustering: a component whose
     max depth is d needs d plain min-propagation rounds (and is the
-    quantity the adaptive halving_after threshold in
+    quantity the adaptive _HALVING_AFTER threshold in
     ``connected_components`` keys on).
 
     ``edges`` (node_a, node_b) undirected; ``roots`` one column of
@@ -462,15 +335,14 @@ def bfs_depths(
     # max_rounds must return, not raise — only a frontier still
     # expanding past the cap is an error
     for r in range(1, max_rounds + 2):
-        nxt = (
+        nxt, n_nxt = _checkpoint_count(
             frontier.join(sym, frontier["node"] == sym["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .select("node", F.lit(r).cast("long").alias("depth"))
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
+        if n_nxt == 0:
             return dist
         if r > max_rounds:
             break

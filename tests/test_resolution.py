@@ -259,14 +259,33 @@ def test_snm_window_recovers_pairs_key_families_miss(spark):
     assert on["vladimir putin"] == "vladimir putin"
 
 
-def test_alternating_star_matches_hash_min_on_random_graphs(spark):
-    """Kiveris-style large-star/small-star must produce exactly the
-    hash-min labels (cluster = component min) on seeded random graphs,
-    chains, hubs, and graphs with isolated nodes."""
+def _union_find_min_labels(edge_rows, node_rows):
+    """Reference: node -> min node of its component (pure Python)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    for x in node_rows or ():
+        find(x)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_matches_union_find_on_random_graphs(spark):
+    """Hash-min labels (cluster = component min) equal a union-find
+    reference on seeded random graphs, a long chain (which engages
+    pointer halving), a hub, and a node universe taken from the edges."""
     import random
 
     from rosette_elasticsearch_plugin_spark.resolution.clustering import (
-        alternating_star_components,
         connected_components,
     )
 
@@ -299,33 +318,72 @@ def test_alternating_star_matches_hash_min_on_random_graphs(spark):
             if node_rows is not None
             else None
         )
-        want = {
+        got = {
             r["node"]: r["cluster"]
             for r in connected_components(edges, nodes=nodes).collect()
         }
-        stats = {}
-        got = {
-            r["node"]: r["cluster"]
-            for r in alternating_star_components(
-                edges, nodes=nodes, stats=stats
-            ).collect()
-        }
-        assert got == want
-        assert stats["rounds"] >= 1
+        assert got == _union_find_min_labels(edge_rows, node_rows)
 
 
-def test_alternating_star_empty_and_isolated(spark):
+def test_connected_components_empty_and_isolated(spark):
+    """No edges: every node of the universe is its own cluster, with
+    or without stats, and stats records zero rounds."""
     from rosette_elasticsearch_plugin_spark.resolution.clustering import (
-        alternating_star_components,
+        connected_components,
     )
 
     edges = spark.createDataFrame([], "node_a string, node_b string")
     nodes = spark.createDataFrame([("a",), ("b",)], "node string")
-    got = {
-        r["node"]: r["cluster"]
-        for r in alternating_star_components(edges, nodes=nodes).collect()
+    stats: dict = {}
+    for kwargs in ({}, {"stats": stats}):
+        got = {
+            r["node"]: r["cluster"]
+            for r in connected_components(
+                edges, nodes=nodes, **kwargs
+            ).collect()
+        }
+        assert got == {"a": "a", "b": "b"}
+    assert stats == {
+        "rounds": 0, "changed_per_round": [], "halving_from_round": None
     }
-    assert got == {"a": "a", "b": "b"}
+
+
+def test_connected_components_stats_do_not_change_the_plan(spark):
+    """Passing stats only records counts the convergence check reads
+    anyway: on the 40-link chain (plain and halving rounds) both calls
+    start the same number of Spark jobs and return the same labels."""
+    import time
+
+    from rosette_elasticsearch_plugin_spark.resolution.clustering import (
+        connected_components,
+    )
+
+    ids = [f"n{i:02d}" for i in range(40)]
+    chain = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(39)],
+        "node_a string, node_b string",
+    ).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def settled_job_count(group):
+        # job-start events reach the status tracker asynchronously
+        n, seen = -1, len(tracker.getJobIdsForGroup(group))
+        while n != seen:
+            time.sleep(0.5)
+            n, seen = seen, len(tracker.getJobIdsForGroup(group))
+        return n
+
+    runs = {}
+    for group, kwargs in (("cc-plain", {}), ("cc-stats", {"stats": {}})):
+        sc.setJobGroup(group, group)
+        try:
+            labels = dict(connected_components(chain, **kwargs).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        runs[group] = (settled_job_count(group), labels)
+    assert runs["cc-plain"] == runs["cc-stats"]
+    assert runs["cc-plain"][1] == {n: ids[0] for n in ids}
 
 
 def test_bfs_depths_chain_and_cycle(spark):
