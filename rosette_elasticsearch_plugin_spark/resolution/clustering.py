@@ -34,7 +34,9 @@ value-for-value.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+import uuid
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 # plain min-propagation rounds before the pointer-halving jump join
 # switches on; small-diameter graphs converge before it and never pay
@@ -46,12 +48,18 @@ def _checkpoint_count(
     df: DataFrame, where: Column | None = None
 ) -> tuple[DataFrame, int]:
     """Eager ``localCheckpoint`` of ``df`` and its row count (of rows
-    where ``where`` holds, if given).  The count is an ``Observation``
-    filled by the checkpoint job itself, so it costs no Spark job."""
-    obs = Observation()
+    where ``where`` holds, if given).  The count is a metric observed
+    by the checkpoint job itself, so it costs no Spark job.  It is read
+    off the checkpoint's own query execution once the job has finished,
+    not through ``Observation``: that waits without limit for a
+    listener-bus event, so a late or dropped event would hang the
+    caller."""
+    name = f"__checkpoint_count_{uuid.uuid4().hex}"
     n = F.count(F.lit(1)) if where is None else F.count_if(where)
-    df = df.observe(obs, n.alias("n")).localCheckpoint(eager=True)
-    return df, obs.get["n"]
+    observed = df.observe(name, n.alias("n"))
+    df = observed.localCheckpoint(eager=True)
+    metrics = observed._jdf.queryExecution().observedMetrics()
+    return df, metrics.apply(name).getLong(0)
 
 
 def connected_components(
