@@ -31,7 +31,7 @@ from ..operators.name_translation import (
     transliterate_cyr_sql,
 )
 from ..resolution.clustering import connected_components
-from ..resolution.scoring import score_expr, score_sql
+from ..resolution.scoring import score_pairs, score_sql
 from ..sources.adapter import flat_to_spans, parallelize_scan
 
 TOKEN_RE = r"[a-z]+"
@@ -228,9 +228,7 @@ SQL_ER_CANDIDATE_PAIRS = _with_ctes("select token_a, token_b from pairs")
 # R7 — vectorized scoring (pandas-UDF JW vs DuckDB jaro_winkler)
 def q_er_scored_pairs(spark, sf_dir):
     pairs = _token_pairs(_tokens_df(spark, sf_dir))
-    return pairs.withColumn(
-        "score", score_expr(F.col("token_a"), F.col("token_b"))
-    )
+    return score_pairs(pairs, "token_a", "token_b")
 
 
 SQL_ER_SCORED_PAIRS = _with_ctes(
@@ -4201,15 +4199,14 @@ def q_er_cross_link(spark, sf_dir):
         F.col("key").alias("key_b"),
         F.col("source").alias("source_b"),
     )
-    linked = (
+    linked = score_pairs(
         pairs.join(sa, "node_a")
         .join(sb, "node_b")
-        .where(F.col("source_a") != F.col("source_b"))
-        .withColumn(
-            "score", score_expr(F.col("key_a"), F.col("key_b"), cfg.scoring)
-        )
-        .where(F.col("score") >= cfg.scoring.threshold)
-    )
+        .where(F.col("source_a") != F.col("source_b")),
+        "key_a",
+        "key_b",
+        cfg.scoring,
+    ).where(F.col("score") >= cfg.scoring.threshold)
     return linked.select(
         "node_a",
         "node_b",
@@ -4292,15 +4289,14 @@ def q_er_one_to_one(spark, sf_dir):
         F.col("key").alias("key_b"),
         F.col("source").alias("source_b"),
     )
-    linked = (
+    linked = score_pairs(
         pairs.join(sa, "node_a")
         .join(sb, "node_b")
-        .where(F.col("source_a") != F.col("source_b"))
-        .withColumn(
-            "score", score_expr(F.col("key_a"), F.col("key_b"), cfg.scoring)
-        )
-        .where(F.col("score") >= cfg.scoring.threshold)
-    )
+        .where(F.col("source_a") != F.col("source_b")),
+        "key_a",
+        "key_b",
+        cfg.scoring,
+    ).where(F.col("score") >= cfg.scoring.threshold)
     oriented = linked.select(
         F.when(F.col("source_a") == "A", F.col("node_a"))
         .otherwise(F.col("node_b"))
@@ -4900,18 +4896,18 @@ SQL_ER_CLUSTER_REPAIR = _sql_er_cluster_repair()
 # Match explainability: per-feature breakdown for every candidate pair
 # of the fixture universe — jw / lev / token-jaccard / coverage plus the
 # contradiction and expansion gates beside the final score.  The Spark
-# side shares ONE kernel evaluation between the breakdown and the score
-# (resolution/scoring.explain_expr — score_expr IS its "score" entry),
-# so the explanation can never drift from the production decision; the
-# oracle rebuilds each feature from the same SQL fragments score_sql
-# composes.  This is the audit surface a deployment needs when a
+# side takes the breakdown and the score from ONE kernel evaluation in
+# one projection (resolution/scoring.explain_pairs, which score_pairs
+# shares), so the explanation can never drift from the production
+# decision; the oracle rebuilds each feature from the same SQL
+# fragments score_sql composes.  This is the audit surface a deployment needs when a
 # reviewer asks why two records were (or weren't) linked. -------------------
 def q_er_score_explain(spark, sf_dir):
     from .. import corpus
     from ..operators.entities import distinct_mention_names
     from ..resolution.blocking import all_blocks
     from ..resolution.pairs import candidate_pairs
-    from ..resolution.scoring import explain_expr
+    from ..resolution.scoring import explain_pairs
     from .er_pipeline import ERConfig, er_key_col
 
     cfg = ERConfig()
@@ -4928,21 +4924,14 @@ def q_er_score_explain(spark, sf_dir):
     )
     ka = keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a"))
     kb = keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b"))
-    ex = explain_expr(F.col("key_a"), F.col("key_b"), cfg.scoring)
-    return (
-        pairs.join(ka, "node_a")
-        .join(kb, "node_b")
-        .select(
-            "node_a",
-            "node_b",
-            F.round(ex["jw"], 6).alias("jw"),
-            F.round(ex["lev"], 6).alias("lev"),
-            F.round(ex["token_jaccard"], 6).alias("token_jaccard"),
-            F.round(ex["coverage"], 6).alias("coverage"),
-            F.round(ex["contradiction"], 6).alias("contradiction"),
-            F.round(ex["expansion"], 6).alias("expansion"),
-            ex["score"].alias("score"),
-        )
+    feats = ["jw", "lev", "token_jaccard", "coverage", "contradiction", "expansion"]
+    return explain_pairs(
+        pairs.join(ka, "node_a").join(kb, "node_b"), "key_a", "key_b", cfg.scoring
+    ).select(
+        "node_a",
+        "node_b",
+        *[F.round(f, 6).alias(f) for f in feats],
+        "score",
     )
 
 
@@ -5036,15 +5025,13 @@ def q_er_threshold_sweep(spark, sf_dir):
         .localCheckpoint(eager=False)
     )
     labeled = (
-        pairs.join(ka, "node_a")
-        .join(kb, "node_b")
-        .select(
-            "node_a",
-            "node_b",
-            score_expr(F.col("key_a"), F.col("key_b"), cfg.scoring).alias(
-                "score"
-            ),
+        score_pairs(
+            pairs.join(ka, "node_a").join(kb, "node_b"),
+            "key_a",
+            "key_b",
+            cfg.scoring,
         )
+        .select("node_a", "node_b", "score")
         .join(
             tpairs.withColumn("is_true", F.lit(True)),
             ["node_a", "node_b"],
@@ -5222,15 +5209,13 @@ def q_er_label_queue(spark, sf_dir):
     ka = keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a"))
     kb = keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b"))
     scored = (
-        pairs.join(ka, "node_a")
-        .join(kb, "node_b")
-        .select(
-            "node_a",
-            "node_b",
-            score_expr(F.col("key_a"), F.col("key_b"), cfg.scoring).alias(
-                "score"
-            ),
+        score_pairs(
+            pairs.join(ka, "node_a").join(kb, "node_b"),
+            "key_a",
+            "key_b",
+            cfg.scoring,
         )
+        .select("node_a", "node_b", "score")
         .withColumn(
             "uncertainty", F.abs(F.col("score") - F.lit(cfg.scoring.threshold))
         )
@@ -5394,10 +5379,11 @@ def q_er_cluster_confidence(spark, sf_dir):
     ka = keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a"))
     kb = keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b"))
     edges = (
-        pairs.join(ka, "node_a")
-        .join(kb, "node_b")
-        .withColumn(
-            "score", score_expr(F.col("key_a"), F.col("key_b"), cfg.scoring)
+        score_pairs(
+            pairs.join(ka, "node_a").join(kb, "node_b"),
+            "key_a",
+            "key_b",
+            cfg.scoring,
         )
         .where(F.col("score") >= cfg.scoring.threshold)
         .select("node_a", "node_b", "score")
@@ -6738,7 +6724,6 @@ def q_er_progressive(spark, sf_dir):
     from pyspark.sql import Window
 
     from ..resolution.blocking import all_blocks
-    from ..resolution.scoring import score_expr
     from .er_pipeline import ERConfig
 
     cfg = ERConfig()
@@ -6758,22 +6743,19 @@ def q_er_progressive(spark, sf_dir):
         .groupBy("node_a", "node_b")
         .agg(F.min("n").cast("long").alias("msize"))
     )
-    scored = (
+    scored = score_pairs(
         pairs.join(
             keyed.select(F.col("node").alias("node_a"), F.col("key").alias("ka")),
             "node_a",
-        )
-        .join(
+        ).join(
             keyed.select(F.col("node").alias("node_b"), F.col("key").alias("kb")),
             "node_b",
-        )
-        .select(
-            "msize", "node_a", "node_b",
-            (
-                score_expr(F.col("ka"), F.col("kb"))
-                >= cfg.scoring.threshold
-            ).cast("long").alias("is_match"),
-        )
+        ),
+        "ka",
+        "kb",
+    ).select(
+        "msize", "node_a", "node_b",
+        (F.col("score") >= cfg.scoring.threshold).cast("long").alias("is_match"),
     )
     # the curve is a diagnostic over the bounded scored-pair table
     # (like er_threshold_sweep): single-partition windows are fine here

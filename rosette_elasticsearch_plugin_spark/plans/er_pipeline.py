@@ -158,12 +158,7 @@ def _pair_edges(pairs: DataFrame, keyed: DataFrame, cfg: ERConfig) -> DataFrame:
         keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b")),
         "node_b",
     )
-    scored = score_pairs(
-        pairs,
-        cfg=cfg.scoring,
-        key_a=F.col("key_a"),
-        key_b=F.col("key_b"),
-    )
+    scored = score_pairs(pairs, "key_a", "key_b", cfg.scoring)
     return match_edges(scored, cfg.scoring)
 
 

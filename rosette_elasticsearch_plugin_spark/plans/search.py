@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..resolution.blocking import all_blocks
-from ..resolution.scoring import score_expr
+from ..resolution.scoring import score_pairs
 from .er_pipeline import ERConfig, er_key_col
 
 
@@ -90,16 +90,15 @@ def search_names(
         qb.join(idx, "block_key").select("query", "name", "__nkey").distinct()
     )
     # query-side key joined back precomputed (translit once per query)
-    scored = (
+    scored = score_pairs(
         cand.join(
             qk.select(F.col("node").alias("query"), F.col("key").alias("__qkey")),
             "query",
-        )
-        .withColumn(
-            "score", score_expr(F.col("__qkey"), F.col("__nkey"), cfg.scoring)
-        )
-        .where(F.col("score") >= tau)
-    )
+        ),
+        "__qkey",
+        "__nkey",
+        cfg.scoring,
+    ).where(F.col("score") >= tau)
     from pyspark.sql import Window
 
     w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("name"))

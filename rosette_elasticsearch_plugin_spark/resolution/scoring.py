@@ -21,12 +21,16 @@ Score over the ER canonical key (transliterated normalized name):
                      because their stripped forms are equal)
           raw        otherwise
 
-Execution: jw and cov need Python string loops → ONE Arrow-batched
-pandas UDF computes both per batch (one Python hop, mirroring the
-reference's one-HTTP-round-trip design, ``EntitiesProcessor.java:76-89``);
-lev/jac/gate are JVM built-ins.  DuckDB mirror in ``score_sql`` is
-value-identical (verified in tests) so the driver oracle can check
-every score.
+Execution: jw and the token-alignment features (cov, contra, expand)
+need Python string work → ONE Arrow-batched pandas UDF computes them
+all per batch (one Python hop, mirroring the reference's
+one-HTTP-round-trip design, ``EntitiesProcessor.java:76-89``).
+``score_pairs`` projects that UDF once per pair row into a struct
+column and builds the score from the column; the UDF is a plan barrier
+(nondeterministic), so Catalyst would run it once per reference if it
+were called inside the score expression itself.  lev/jac/gates are JVM
+built-ins.  DuckDB mirror in ``score_sql`` is value-identical (verified
+in tests) so the driver oracle can check every score.
 """
 
 from __future__ import annotations
@@ -350,13 +354,14 @@ _FEATURES_TYPE = T.StructType(
 def pair_features_udf(
     a: pd.Series, b: pd.Series, sa: pd.Series, sb: pd.Series
 ) -> pd.DataFrame:
-    """jw-best + token-cover per pair — one Python hop per batch.
+    """jw-best + token-alignment features per pair — one Python hop
+    per batch.
 
     The three Jaro(-Winkler) variants run numpy-batched over the whole
     Arrow batch (jaro_batch_np — bit-identical to the scalar loop,
     measured ~2.7× faster on the jw stage); the token-alignment
-    features (cov/contra/expand) stay per-pair: their work is a few
-    comparisons over ≤4 short tokens, already cheap."""
+    features (cov/contra/expand) are numpy-batched too, bucketed by
+    token-count signature (``_token_features_batch``)."""
     import numpy as np
 
     av = [x if isinstance(x, str) else "" for x in a.to_numpy()]
@@ -381,62 +386,88 @@ def pair_features_udf(
 
 
 # Plan barrier, NOT actual nondeterminism (the features are pure
-# functions of their inputs): marking the UDF nondeterministic stops
+# functions of their inputs).  Marking the UDF nondeterministic stops
 # Catalyst from pushing a ``score >= τ`` filter down through the
-# pair-dedup aggregate into BOTH union branches of candidate_pairs —
-# which (a) ran the Arrow-batched scoring twice, on pre-dedup rows, and
-# (b) inlined the full score expression into each branch's generated
-# stage, blowing janino's 64 KB method limit (interpreted fallback).
-# With the barrier the score is computed exactly once, above the dedup.
+# pair-dedup aggregate into BOTH union branches of candidate_pairs,
+# which ran the Arrow hop twice, on pre-dedup rows, and inlined the
+# score into each branch's generated stage.  The price: Catalyst never
+# merges equal nondeterministic calls, so every ``feat[...]`` reference
+# in a score expression would be its own kernel run.  Hence the
+# one-projection rule: the UDF is called only in ``_explained``, which
+# projects it once into a struct column; the score reads that column.
+# A filter cannot push through that nondeterministic Project and
+# CollapseProject will not inline it, so the kernel runs once per pair
+# row, above the dedup.
 pair_features_udf = pair_features_udf.asNondeterministic()
 
+_FEAT = "__pair_features"
 
-def explain_expr(
-    a: Column, b: Column, cfg: ScoringConfig = ScoringConfig()
-) -> dict[str, Column]:
-    """Named per-feature columns + the final score — the "why did these
-    two records link" surface.  One kernel evaluation feeds every
-    field; ``score_expr`` is the ``score`` entry, so the breakdown can
-    never drift from the production score."""
-    sa, sb = sort_tokens_col(a), sort_tokens_col(b)
-    feat = pair_features_udf(a, b, sa, sb)
-    ca, cb = F.replace(a, F.lit(" "), F.lit("")), F.replace(b, F.lit(" "), F.lit(""))
-    lev = F.greatest(levenshtein_sim_col(a, b), levenshtein_sim_col(ca, cb))
-    jac = token_jaccard_col(a, b)
-    raw = (
-        F.lit(cfg.w_jw) * feat["jw"]
-        + F.lit(cfg.w_lev) * lev
-        + F.lit(cfg.w_jac) * jac
-        + F.lit(cfg.w_cov) * feat["cov"]
+
+def _explained(
+    pairs: DataFrame, a: str, b: str, cfg: ScoringConfig
+) -> tuple[DataFrame, dict[str, Column]]:
+    """``pairs`` with the kernel's feature struct projected once, plus
+    the named per-feature columns and the final score built from it.
+
+    The gate tree is linear in size: the single-token and contradiction
+    penalties are factors (``x * 1.0 == x`` in IEEE, so values equal the
+    nested-``when`` form of ``score_sql``), and the expansion floor is
+    the one remaining branch.  A NULL key scores NULL."""
+    ca, cb = F.col(a), F.col(b)
+    feat_df = pairs.withColumn(
+        _FEAT,
+        pair_features_udf(ca, cb, sort_tokens_col(ca), sort_tokens_col(cb)),
     )
-    na, nb = F.size(F.split(a, " ")), F.size(F.split(b, " "))
+    feat = F.col(_FEAT)
+    jw, cov = feat["jw"], feat["cov"]
+    sa, sb = F.replace(ca, F.lit(" "), F.lit("")), F.replace(cb, F.lit(" "), F.lit(""))
+    lev = F.greatest(levenshtein_sim_col(ca, cb), levenshtein_sim_col(sa, sb))
+    jac = token_jaccard_col(ca, cb)
+    na, nb = F.size(F.split(ca, " ")), F.size(F.split(cb, " "))
     raw = F.when(
         (na == 1) & (nb == 1),
-        F.lit(cfg.w_jw_single) * feat["jw"] + F.lit(cfg.w_lev_single) * lev,
-    ).otherwise(raw)
-    gated = F.when(
-        (na != nb) & (F.least(na, nb) == 1) & (ca != cb),
-        raw * cfg.single_token_penalty,
-    ).otherwise(raw)
-    gated = F.when(
-        feat["contra"] == 1.0, gated * cfg.contradiction_penalty
-    ).otherwise(gated)
-    gated = F.when(
+        F.lit(cfg.w_jw_single) * jw + F.lit(cfg.w_lev_single) * lev,
+    ).otherwise(
+        F.lit(cfg.w_jw) * jw
+        + F.lit(cfg.w_lev) * lev
+        + F.lit(cfg.w_jac) * jac
+        + F.lit(cfg.w_cov) * cov
+    )
+    single = (na != nb) & (F.least(na, nb) == 1) & (sa != sb)
+    gated = (
+        raw
+        * F.when(single, F.lit(cfg.single_token_penalty)).otherwise(F.lit(1.0))
+        * F.when(
+            feat["contra"] == 1.0, F.lit(cfg.contradiction_penalty)
+        ).otherwise(F.lit(1.0))
+    )
+    score = F.when(
         feat["expand"] == 1.0, F.greatest(gated, F.lit(cfg.expansion_floor))
     ).otherwise(gated)
-    return {
-        "jw": feat["jw"],
+    return feat_df, {
+        "jw": jw,
         "lev": lev,
         "token_jaccard": jac,
-        "coverage": feat["cov"],
+        "coverage": cov,
         "contradiction": feat["contra"],
         "expansion": feat["expand"],
-        "score": F.round(gated, 6),
+        "score": F.round(score, 6),
     }
 
 
-def score_expr(a: Column, b: Column, cfg: ScoringConfig = ScoringConfig()) -> Column:
-    return explain_expr(a, b, cfg)["score"]
+def explain_pairs(
+    pairs: DataFrame,
+    a: str = "node_a",
+    b: str = "node_b",
+    cfg: ScoringConfig = ScoringConfig(),
+) -> DataFrame:
+    """Add the per-feature breakdown (jw, lev, token_jaccard, coverage,
+    contradiction, expansion) and ``score`` — the "why did these two
+    records link" surface.  Breakdown and score come from one kernel
+    evaluation in one projection, so the explanation can never drift
+    from the production score."""
+    feat_df, cols = _explained(pairs, a, b, cfg)
+    return feat_df.withColumns(cols).drop(_FEAT)
 
 
 def score_pairs(
@@ -444,14 +475,11 @@ def score_pairs(
     a: str = "node_a",
     b: str = "node_b",
     cfg: ScoringConfig = ScoringConfig(),
-    key_a: Column | None = None,
-    key_b: Column | None = None,
 ) -> DataFrame:
-    """Add a ``score`` column.  ``key_a``/``key_b`` override the scored
-    expressions (e.g. the transliterated ER keys of node_a/node_b)."""
-    ca = key_a if key_a is not None else F.col(a)
-    cb = key_b if key_b is not None else F.col(b)
-    return pairs.withColumn("score", score_expr(ca, cb, cfg))
+    """Add a ``score`` column over the string columns ``a`` and ``b``
+    (e.g. the transliterated ER keys of node_a/node_b)."""
+    feat_df, cols = _explained(pairs, a, b, cfg)
+    return feat_df.withColumn("score", cols["score"]).drop(_FEAT)
 
 
 def match_edges(
@@ -595,7 +623,7 @@ def lev_sql(a: str, b: str) -> str:
 
 
 def score_sql(a: str, b: str, cfg: ScoringConfig = ScoringConfig()) -> str:
-    """DuckDB mirror of score_expr (value-identical; round 6dp)."""
+    """DuckDB mirror of score_pairs (value-identical; round 6dp)."""
     ca, cb = f"replace({a}, ' ', '')", f"replace({b}, ' ', '')"
     jw = jw_sql(a, b)
     lev = lev_sql(a, b)

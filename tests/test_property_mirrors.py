@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from rosette_elasticsearch_plugin_spark.functions import hashing as H
 from rosette_elasticsearch_plugin_spark.functions import normalize as N
 from rosette_elasticsearch_plugin_spark.resolution.scoring import (
-    score_expr,
+    score_pairs,
     score_sql,
 )
 
@@ -189,9 +189,9 @@ def test_pair_score_two_way(spark, a, b):
     a, b = " ".join(a.split()), " ".join(b.split())
     if not a or not b:
         return
-    got = spark.createDataFrame([(a, b)], "a string, b string").select(
-        score_expr(F.col("a"), F.col("b")).alias("s")
-    ).collect()[0]["s"]
+    got = score_pairs(
+        spark.createDataFrame([(a, b)], "a string, b string"), "a", "b"
+    ).collect()[0]["score"]
     con = duckdb.connect()
     con.execute("create temp table p(a varchar, b varchar)")
     con.execute("insert into p values (?, ?)", [a, b])
@@ -332,9 +332,9 @@ def test_pair_score_two_way_adversarial_ascii(spark, a, b):
     strings, leading/double/trailing spaces (empty tokens), digits,
     quotes, punctuation.  Regression: an empty token (double space)
     crashed the pair-features kernel with IndexError on u[0]."""
-    got_spark = spark.createDataFrame([(a, b)], "a string, b string").select(
-        score_expr(F.col("a"), F.col("b")).alias("o")
-    ).collect()[0]["o"]
+    got_spark = score_pairs(
+        spark.createDataFrame([(a, b)], "a string, b string"), "a", "b"
+    ).collect()[0]["score"]
     con = duckdb.connect()
     con.execute("create temp table p(a varchar, b varchar)")
     con.execute("insert into p values (?, ?)", [a, b])

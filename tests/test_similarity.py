@@ -2,14 +2,12 @@
 
 import random
 
-from pyspark.sql import functions as F
-
 from rosette_elasticsearch_plugin_spark.functions.similarity import (
     jaro_py,
     jaro_winkler_py,
 )
 from rosette_elasticsearch_plugin_spark.resolution.scoring import (
-    score_expr,
+    score_pairs,
     score_sql,
 )
 
@@ -44,9 +42,9 @@ def test_score_parity_name_pairs(spark, duck):
     df = spark.createDataFrame(NAME_PAIRS, "a string, b string")
     got = {
         (r["a"], r["b"]): r["s"]
-        for r in df.select(
-            "a", "b", score_expr(F.col("a"), F.col("b")).alias("s")
-        ).collect()
+        for r in score_pairs(df, "a", "b")
+        .withColumnRenamed("score", "s")
+        .collect()
     }
     for a, b in NAME_PAIRS:
         want = duck.execute(
