@@ -7,8 +7,7 @@ runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32),
 best-of-``$SPARK_GRAFT_BENCH_REPEATS`` (default 2) per query after an
 untimed warmup, and prints ONE JSON line (all trials included as
-``trials_sec``; connected-components convergence telemetry as
-``cc_rounds`` / ``cc_changed_per_round`` / ``cc_halving_from_round``)::
+``trials_sec``)::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...}, "sf": 0.1, ...}
@@ -84,7 +83,7 @@ def _force(df) -> int:
     return 0
 
 
-def _flagship(spark, sf_dir: str, repl: int = 1, cc_stats: dict | None = None):
+def _flagship(spark, sf_dir: str, repl: int = 1):
     """Full ER pipeline over the interleaved adapter view; optionally
     replicate the corpus ``repl``× (deterministic doc_id remap — same
     name universe, so the doc-side work scales while the distinct-name
@@ -112,18 +111,12 @@ def _flagship(spark, sf_dir: str, repl: int = 1, cc_stats: dict | None = None):
             .drop("rep")
         )
     docs = flat_to_spans(flat)
-    assigned, _ = resolve_documents(docs, pattern=r"[a-z]{2,}", cc_stats=cc_stats)
+    assigned, _ = resolve_documents(docs, pattern=r"[a-z]{2,}")
     return assigned.select("doc_id", "mention_id", "normalized", "cluster")
 
 
-def _headline_queries(
-    spark, sf_dir: str, cc_stats: dict | None = None
-) -> dict:
-    """name -> thunk returning a DataFrame to materialize.
-
-    ``cc_stats``: optional dict of per-query connected-components
-    convergence telemetry (rounds / changed counts / halving round),
-    keyed by query name — populated when the thunk runs."""
+def _headline_queries(spark, sf_dir: str) -> dict:
+    """name -> thunk returning a DataFrame to materialize."""
     from pyspark.sql import functions as F
 
     from rosette_elasticsearch_plugin_spark.functions import textstats as TS
@@ -146,19 +139,10 @@ def _headline_queries(
             TS.fingerprint_col(F.col("text")).alias("fingerprint"),
         )
 
-    def _stats_for(name):
-        if cc_stats is None:
-            return None
-        return cc_stats.setdefault(name, {})
-
     return {
-        "er_resolve_full": lambda: _flagship(
-            spark, sf_dir, cc_stats=_stats_for("er_resolve_full")
-        ),
+        "er_resolve_full": lambda: _flagship(spark, sf_dir),
         "enrich_all": enrich_all,
-        "er_clusters": lambda: DQ.q_er_clusters(
-            spark, sf_dir, cc_stats=_stats_for("er_clusters")
-        ),
+        "er_clusters": lambda: DQ.q_er_clusters(spark, sf_dir),
         "dedup_near_minhash": lambda: DQ.q_dedup_near_minhash(spark, sf_dir),
         "dedup_simhash": lambda: DQ.q_dedup_simhash(spark, sf_dir),
         "ann_brute_topk": lambda: DQ.q_ann_brute_topk(spark, sf_dir),
@@ -213,10 +197,9 @@ def run_bench() -> None:
     # where local reruns of identical code measured 17-20 s), so the
     # min per query is the capacity measurement — same rationale as
     # the interleaved --scaling trials.  All trials are reported.
-    cc_stats: dict = {}
     trials: dict[str, list[float]] = {}
     for rep in range(REPEATS):
-        for name, thunk in _headline_queries(spark, SF_DIR, cc_stats).items():
+        for name, thunk in _headline_queries(spark, SF_DIR).items():
             t0 = time.time()
             _force(thunk())
             trials.setdefault(name, []).append(round(time.time() - t0, 3))
@@ -225,7 +208,7 @@ def run_bench() -> None:
     # noisy-neighbor episodes (identical code measures bimodally, e.g.
     # 4.3 s / 13.5 s back-to-back) — one extra trial per such query
     # recovers the capacity number without inflating the steady case.
-    queries_now = _headline_queries(spark, SF_DIR, cc_stats)
+    queries_now = _headline_queries(spark, SF_DIR)
     for name, ts in trials.items():
         if len(ts) >= 2 and max(ts) > 2 * min(ts):
             t0 = time.time()
@@ -248,15 +231,6 @@ def run_bench() -> None:
                 "er_docs_per_sec": docs_per_sec,
                 "repeats": REPEATS,
                 "trials_sec": trials,
-                "cc_rounds": {
-                    q: s.get("rounds") for q, s in cc_stats.items()
-                },
-                "cc_changed_per_round": {
-                    q: s.get("changed_per_round") for q, s in cc_stats.items()
-                },
-                "cc_halving_from_round": {
-                    q: s.get("halving_from_round") for q, s in cc_stats.items()
-                },
             }
         )
     )

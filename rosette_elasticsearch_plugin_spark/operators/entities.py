@@ -45,41 +45,6 @@ MENTION_PATTERN = (
 # RNT is asked only for these types (EntitiesProcessor.java:156-159)
 TRANSLATABLE_TYPES = ("PERSON", "LOCATION", "ORGANIZATION")
 
-_SPAN_MENTIONS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("start", T.IntegerType()),
-            T.StructField("end", T.IntegerType()),
-            T.StructField("surface", T.StringType()),
-        ]
-    )
-)
-
-
-@pandas_udf(_SPAN_MENTIONS_TYPE)
-def extract_mentions_udf(texts: pd.Series, patterns: pd.Series) -> pd.Series:
-    """P6a: regex NER over a batch of text spans (Arrow-vectorized).
-    ``patterns`` is a literal column (one compile per batch)."""
-    import re
-
-    out = []
-    pat = None
-    pat_src = None
-    for t, p in zip(texts, patterns):
-        if pat_src != p:
-            pat, pat_src = re.compile(p), p
-        if not t:
-            out.append([])
-            continue
-        out.append(
-            [
-                {"start": m.start(), "end": m.end(), "surface": m.group(0)}
-                for m in pat.finditer(t)
-            ]
-        )
-    return pd.Series(out)
-
-
 _MENTION_ROWS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),

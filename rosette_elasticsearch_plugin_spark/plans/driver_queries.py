@@ -31,6 +31,7 @@ from ..operators.name_translation import (
     transliterate_cyr_sql,
 )
 from ..resolution.clustering import connected_components
+from ..resolution.pairs import pair_sides
 from ..resolution.scoring import score_pairs, score_sql
 from ..sources.adapter import flat_to_spans, parallelize_scan
 
@@ -249,11 +250,11 @@ SQL_ER_MATCH_EDGES = _with_ctes(
 
 
 # R9/R10 — connected components + stable min-id cluster
-def q_er_clusters(spark, sf_dir, cc_stats: dict | None = None):
+def q_er_clusters(spark, sf_dir):
     tokens = _tokens_df(spark, sf_dir)
     edges = q_er_match_edges(spark, sf_dir).select("token_a", "token_b")
     return connected_components(
-        edges, nodes=tokens, src="token_a", dst="token_b", stats=cc_stats
+        edges, nodes=tokens, src="token_a", dst="token_b"
     ).select(F.col("node").alias("token"), "cluster")
 
 
@@ -3343,6 +3344,16 @@ def _name_f1_fixture() -> tuple[list[str], list[tuple]]:
     return names, truth
 
 
+def _fixture_tn_vals() -> str:
+    """VALUES rows (entity_label, normalized) of the fixture's planted
+    truth — the oracle side of ``_fixture_labels``."""
+    _names, truth = _name_f1_fixture()
+    return ", ".join(
+        "('" + e.replace("'", "''") + "', '" + n.replace("'", "''") + "')"
+        for e, n in sorted({(e, n) for _m, e, n in truth})
+    )
+
+
 def _sql_er_name_f1() -> str:
     from .er_oracle import cluster_ctes
 
@@ -3691,41 +3702,10 @@ def q_er_name_f1(spark, sf_dir):
 # running the full pipeline.  A pair the blocker never co-blocks can
 # never be scored, so this bounds end-to-end recall from above.
 def q_er_blocking_recall(spark, sf_dir):
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from .er_pipeline import ERConfig, er_key_col
+    from .er_pipeline import ERConfig
 
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, truth = corpus.to_spark(spark, c)
-    names = distinct_mention_names(docs).localCheckpoint(eager=False)
-    keyed = names.select("node", er_key_col(F.col("node")).alias("key"))
-    blocks = all_blocks(keyed, ERConfig().blocking).localCheckpoint(
-        eager=False
-    )
-    tn = truth.select("entity_label", "normalized").distinct()
-    a, b = tn.alias("a"), tn.alias("b")
-    tpairs = (
-        a.join(
-            b,
-            (F.col("a.entity_label") == F.col("b.entity_label"))
-            & (F.col("a.normalized") < F.col("b.normalized")),
-        )
-        .select(
-            F.col("a.normalized").alias("node_a"),
-            F.col("b.normalized").alias("node_b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    ba = blocks.select(F.col("node").alias("node_a"), "block_key")
-    bb = blocks.select(F.col("node").alias("node_b"), "block_key")
-    shared = (
-        tpairs.join(ba, "node_a")
-        .join(bb, ["node_b", "block_key"])
-        .select("node_a", "node_b")
-        .distinct()
-    )
+    tpairs, fam = _true_pair_families(spark, ERConfig())
+    shared = fam.select("node_a", "node_b").distinct()
     out = tpairs.agg(
         F.count("*").cast("long").alias("n_true_pairs")
     ).crossJoin(
@@ -3746,45 +3726,9 @@ def q_er_blocking_recall(spark, sf_dir):
 # diagnostic that says which family is earning its shuffle and which
 # true pairs only one family catches, before any threshold tuning. --------
 def q_er_block_family_recall(spark, sf_dir, _cfg=None):
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from .er_pipeline import ERConfig, er_key_col
+    from .er_pipeline import ERConfig
 
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, truth = corpus.to_spark(spark, c)
-    names = distinct_mention_names(docs).localCheckpoint(eager=False)
-    keyed = names.select("node", er_key_col(F.col("node")).alias("key"))
-    blocks = all_blocks(
-        keyed, (_cfg or ERConfig()).blocking
-    ).localCheckpoint(eager=False)
-    tn = truth.select("entity_label", "normalized").distinct()
-    a, b = tn.alias("a"), tn.alias("b")
-    tpairs = (
-        a.join(
-            b,
-            (F.col("a.entity_label") == F.col("b.entity_label"))
-            & (F.col("a.normalized") < F.col("b.normalized")),
-        )
-        .select(
-            F.col("a.normalized").alias("node_a"),
-            F.col("b.normalized").alias("node_b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    ba = blocks.select(F.col("node").alias("node_a"), "block_key")
-    bb = blocks.select(F.col("node").alias("node_b"), "block_key")
-    fam = (
-        tpairs.join(ba, "node_a")
-        .join(bb, ["node_b", "block_key"])
-        .select(
-            "node_a",
-            "node_b",
-            F.substring("block_key", 1, 1).alias("family"),
-        )
-        .distinct()
-    )
+    tpairs, fam = _true_pair_families(spark, _cfg or ERConfig())
     nt = tpairs.agg(F.count("*").cast("long").alias("n_true_pairs"))
     return (
         fam.groupBy("family")
@@ -3810,12 +3754,8 @@ def _sql_er_block_family_recall(cfg=None) -> str:
     from .er_oracle import blocks_ctes
     from .er_pipeline import ERConfig
 
-    names, truth = _name_f1_fixture()
-    tn = sorted({(e, n) for _m, e, n in truth})
-    tn_vals = ", ".join(
-        "('" + e.replace("'", "''") + "', '" + n.replace("'", "''") + "')"
-        for e, n in tn
-    )
+    names, _truth = _name_f1_fixture()
+    tn_vals = _fixture_tn_vals()
     return f"""
 with {blocks_ctes(names, cfg or ERConfig())},
 tn(entity_label, normalized) as (values {tn_vals}),
@@ -3894,46 +3834,7 @@ def _scheme_families_expr(mask_col: str):
 
 
 def q_er_block_scheme_recall(spark, sf_dir):
-    cfg = _all_family_cfg()
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from .er_pipeline import er_key_col
-
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, truth = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        .localCheckpoint(eager=False)
-    )
-    blocks = all_blocks(keyed, cfg.blocking).localCheckpoint(eager=False)
-    tn = truth.select("entity_label", "normalized").distinct()
-    a, b = tn.alias("a"), tn.alias("b")
-    tpairs = (
-        a.join(
-            b,
-            (F.col("a.entity_label") == F.col("b.entity_label"))
-            & (F.col("a.normalized") < F.col("b.normalized")),
-        )
-        .select(
-            F.col("a.normalized").alias("node_a"),
-            F.col("b.normalized").alias("node_b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    ba = blocks.select(F.col("node").alias("node_a"), "block_key")
-    bb = blocks.select(F.col("node").alias("node_b"), "block_key")
-    fam = (
-        tpairs.join(ba, "node_a")
-        .join(bb, ["node_b", "block_key"])
-        .select(
-            "node_a", "node_b",
-            F.substring("block_key", 1, 1).alias("family"),
-        )
-        .distinct()
-    )
+    tpairs, fam = _true_pair_families(spark, _all_family_cfg())
     bitval = None
     for i, ch in enumerate(_FAMILY_ORDER):
         term = F.when(F.col("family") == ch, F.lit(1 << i)).otherwise(F.lit(0))
@@ -3976,12 +3877,8 @@ def q_er_block_scheme_recall(spark, sf_dir):
 def _sql_er_block_scheme_recall() -> str:
     from .er_oracle import blocks_ctes
 
-    names, truth = _name_f1_fixture()
-    tn = sorted({(e, n) for _m, e, n in truth})
-    tn_vals = ", ".join(
-        "('" + e.replace("'", "''") + "', '" + n.replace("'", "''") + "')"
-        for e, n in tn
-    )
+    names, _truth = _name_f1_fixture()
+    tn_vals = _fixture_tn_vals()
     bitval = " + ".join(
         f"case when family = '{ch}' then {1 << i} else 0 end"
         for i, ch in enumerate(_FAMILY_ORDER)
@@ -4027,12 +3924,8 @@ SQL_ER_BLOCK_SCHEME_RECALL = _sql_er_block_scheme_recall()
 def _sql_er_blocking_recall() -> str:
     from .er_oracle import blocks_ctes
 
-    names, truth = _name_f1_fixture()
-    tn = sorted({(e, n) for _m, e, n in truth})
-    tn_vals = ", ".join(
-        "('" + e.replace("'", "''") + "', '" + n.replace("'", "''") + "')"
-        for e, n in tn
-    )
+    names, _truth = _name_f1_fixture()
+    tn_vals = _fixture_tn_vals()
     return f"""
 with {blocks_ctes(names)},
 tn(entity_label, normalized) as (values {tn_vals}),
@@ -4164,49 +4057,24 @@ SQL_ER_BCUBED = _sql_er_bcubed()
 # 120-140 searches enriched docs by translated name); here it is one
 # join, with the old×old and new×new pair spaces never generated. ----------
 def q_er_cross_link(spark, sf_dir):
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
-    from .er_pipeline import ERConfig, er_key_col
+    from ..resolution.scoring import match_edges
+    from .er_pipeline import ERConfig, name_pairs
 
     cfg = ERConfig()
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, _ = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        # feeds blocking plus both pair-side source/key joins
-        .localCheckpoint(eager=False)
-    )
+    keyed = _fixture_keyed(spark)
     src = keyed.withColumn(
         "source",
         F.when(
             F.substring(F.md5("node"), 1, 1).isin(*"01234567"), "A"
         ).otherwise("B"),
     )
-    blocks = all_blocks(keyed, cfg.blocking)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
+    _, pairs = name_pairs(keyed, cfg)
+    cross = pair_sides(pairs, src).where(
+        F.col("source_a") != F.col("source_b")
     )
-    sa = src.select(
-        F.col("node").alias("node_a"),
-        F.col("key").alias("key_a"),
-        F.col("source").alias("source_a"),
+    linked = match_edges(
+        score_pairs(cross, "key_a", "key_b", cfg.scoring), cfg.scoring
     )
-    sb = src.select(
-        F.col("node").alias("node_b"),
-        F.col("key").alias("key_b"),
-        F.col("source").alias("source_b"),
-    )
-    linked = score_pairs(
-        pairs.join(sa, "node_a")
-        .join(sb, "node_b")
-        .where(F.col("source_a") != F.col("source_b")),
-        "key_a",
-        "key_b",
-        cfg.scoring,
-    ).where(F.col("score") >= cfg.scoring.threshold)
     return linked.select(
         "node_a",
         "node_b",
@@ -4216,8 +4084,11 @@ def q_er_cross_link(spark, sf_dir):
     )
 
 
-def _sql_er_cross_link() -> str:
-    from .er_oracle import blocks_ctes
+def _cross_link_ctes() -> str:
+    """``with`` list ending in ``linked`` (node_a, node_b, source_a,
+    source_b, score): the cross-source scored pairs both cross-link
+    oracles read."""
+    from .er_oracle import blocks_ctes, cpairs_ctes
     from .er_pipeline import ERConfig
 
     cfg = ERConfig()
@@ -4230,19 +4101,21 @@ src as materialized (
          case when substring(md5(node), 1, 1) in ({halves})
               then 'A' else 'B' end as source
   from names),
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes(cfg)},
 linked as (select node_a, node_b,
                   sa.source as source_a, sb.source as source_b,
                   {score_sql('sa.key', 'sb.key', cfg.scoring)} as score
            from cpairs join src sa on sa.node = cpairs.node_a
                        join src sb on sb.node = cpairs.node_b
-           where sa.source <> sb.source)
+           where sa.source <> sb.source)"""
+
+
+def _sql_er_cross_link() -> str:
+    from .er_pipeline import ERConfig
+
+    return f"""{_cross_link_ctes()}
 select node_a, node_b, source_a, source_b, round(score, 6) as score
-from linked where score >= {cfg.scoring.threshold}
+from linked where score >= {ERConfig().scoring.threshold}
 """
 
 
@@ -4254,88 +4127,25 @@ SQL_ER_CROSS_LINK = _sql_er_cross_link()
 # symmetric best match — resolution/assignment.py.  Scores are rounded
 # to 6dp BEFORE ranking so tie-breaks are engine-identical. -----------------
 def q_er_one_to_one(spark, sf_dir):
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
     from ..resolution.assignment import one_to_one_links
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
-    from .er_pipeline import ERConfig, er_key_col
 
-    cfg = ERConfig()
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, _ = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        .localCheckpoint(eager=False)
-    )
-    src = keyed.withColumn(
-        "source",
-        F.when(
-            F.substring(F.md5("node"), 1, 1).isin(*"01234567"), "A"
-        ).otherwise("B"),
-    )
-    blocks = all_blocks(keyed, cfg.blocking)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
-    sa = src.select(
-        F.col("node").alias("node_a"),
-        F.col("key").alias("key_a"),
-        F.col("source").alias("source_a"),
-    )
-    sb = src.select(
-        F.col("node").alias("node_b"),
-        F.col("key").alias("key_b"),
-        F.col("source").alias("source_b"),
-    )
-    linked = score_pairs(
-        pairs.join(sa, "node_a")
-        .join(sb, "node_b")
-        .where(F.col("source_a") != F.col("source_b")),
-        "key_a",
-        "key_b",
-        cfg.scoring,
-    ).where(F.col("score") >= cfg.scoring.threshold)
-    oriented = linked.select(
-        F.when(F.col("source_a") == "A", F.col("node_a"))
-        .otherwise(F.col("node_b"))
-        .alias("a_node"),
-        F.when(F.col("source_a") == "A", F.col("node_b"))
-        .otherwise(F.col("node_a"))
-        .alias("b_node"),
-        F.round("score", 6).alias("score"),
+    a_first = F.col("source_a") == "A"
+    a_node = F.when(a_first, F.col("node_a")).otherwise(F.col("node_b"))
+    b_node = F.when(a_first, F.col("node_b")).otherwise(F.col("node_a"))
+    # the cross-link scores are already rounded to 6dp
+    oriented = q_er_cross_link(spark, sf_dir).select(
+        a_node.alias("a_node"), b_node.alias("b_node"), "score"
     )
     return one_to_one_links(oriented)
 
 
 def _sql_er_one_to_one() -> str:
     from ..resolution.assignment import one_to_one_sql
-    from .er_oracle import blocks_ctes
     from .er_pipeline import ERConfig
 
     cfg = ERConfig()
-    names, _truth = _name_f1_fixture()
-    halves = ", ".join(f"'{c}'" for c in "01234567")
     inner = one_to_one_sql("oriented")
-    return f"""
-with {blocks_ctes(names)},
-src as materialized (
-  select node, key,
-         case when substring(md5(node), 1, 1) in ({halves})
-              then 'A' else 'B' end as source
-  from names),
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
-linked as (select node_a, node_b,
-                  sa.source as source_a, sb.source as source_b,
-                  {score_sql('sa.key', 'sb.key', cfg.scoring)} as score
-           from cpairs join src sa on sa.node = cpairs.node_a
-                       join src sb on sb.node = cpairs.node_b
-           where sa.source <> sb.source),
+    return f"""{_cross_link_ctes()},
 oriented as (
   select case when source_a = 'A' then node_a else node_b end as a_node,
          case when source_a = 'A' then node_b else node_a end as b_node,
@@ -4492,24 +4302,16 @@ def q_er_cooc_names(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("n_shared"))
         .where(F.col("n_shared") >= COOC_MIN_DOCS)
     )
-    dfreq = m.groupBy("normalized").agg(F.count("*").cast("long").alias("df"))
-    da = dfreq.select(
-        F.col("normalized").alias("node_a"), F.col("df").alias("df_a")
-    )
-    db = dfreq.select(
-        F.col("normalized").alias("node_b"), F.col("df").alias("df_b")
+    dfreq = m.groupBy(F.col("normalized").alias("node")).agg(
+        F.count("*").cast("long").alias("df")
     )
     pmi = F.log(
         (F.col("n_shared") * F.lit(n)).cast("double")
         / (F.col("df_a") * F.col("df_b")).cast("double")
     )
-    return (
-        pairs.join(da, "node_a")
-        .join(db, "node_b")
-        .select(
-            "node_a", "node_b", "n_shared", "df_a", "df_b",
-            F.round(pmi, 6).alias("pmi"),
-        )
+    return pair_sides(pairs, dfreq).select(
+        "node_a", "node_b", "n_shared", "df_a", "df_b",
+        F.round(pmi, 6).alias("pmi"),
     )
 
 
@@ -4553,38 +4355,17 @@ BLOOM_DICE_TAU = 0.8
 
 
 def q_er_bloom_link(spark, sf_dir):
-    from .. import corpus
     from ..functions.bloom import bloom_positions_col, dice_col
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
-    from .er_pipeline import ERConfig, er_key_col
+    from .er_pipeline import name_pairs
 
-    cfg = ERConfig()
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, _ = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        .localCheckpoint(eager=False)
-    )
+    keyed = _fixture_keyed(spark)
     # the "encoding party" view: node id + Bloom positions, no plaintext
     enc = keyed.select(
         "node", bloom_positions_col(F.col("key")).alias("bloom")
     )
-    blocks = all_blocks(keyed, cfg.blocking)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
-    ea = enc.select(
-        F.col("node").alias("node_a"), F.col("bloom").alias("bloom_a")
-    )
-    eb = enc.select(
-        F.col("node").alias("node_b"), F.col("bloom").alias("bloom_b")
-    )
+    _, pairs = name_pairs(keyed)
     return (
-        pairs.join(ea, "node_a")
-        .join(eb, "node_b")
+        pair_sides(pairs, enc)
         .withColumn("dice", dice_col(F.col("bloom_a"), F.col("bloom_b")))
         .where(F.col("dice") >= BLOOM_DICE_TAU)
         .select("node_a", "node_b", "dice")
@@ -4593,20 +4374,14 @@ def q_er_bloom_link(spark, sf_dir):
 
 def _sql_er_bloom_link() -> str:
     from ..functions.bloom import bloom_positions_sql, dice_sql
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
+    from .er_oracle import blocks_ctes, cpairs_ctes
 
-    cfg = ERConfig()
     names, _truth = _name_f1_fixture()
     return f"""
 with {blocks_ctes(names)},
 enc as materialized (
   select node, {bloom_positions_sql('key')} as bloom from names),
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes()},
 diced as (select node_a, node_b,
                  {dice_sql('ea.bloom', 'eb.bloom')} as dice
           from cpairs join enc ea on ea.node = cpairs.node_a
@@ -4623,41 +4398,16 @@ SQL_ER_BLOOM_LINK = _sql_er_bloom_link()
 # then per-pair log-likelihood-ratio weights.  Two query surfaces: the
 # estimated parameter row, and the scored pairs. ----------------------------
 def _fs_spark_parts(spark):
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
     from ..resolution.fs import fs_features, fs_params
-    from ..resolution.pairs import candidate_pairs
-    from .er_pipeline import ERConfig, er_key_col
+    from .er_pipeline import name_pairs
 
-    cfg = ERConfig()
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, truth = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        .localCheckpoint(eager=False)
-    )
-    blocks = all_blocks(keyed, cfg.blocking).localCheckpoint(eager=False)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
+    keyed = _fixture_keyed(spark)
+    blocks, pairs = name_pairs(keyed)
     feats = fs_features(pairs, keyed, blocks)
-    lab = truth.select(
-        F.col("normalized").alias("node"), "entity_label"
-    ).distinct()
-    la = lab.select(
-        F.col("node").alias("node_a"), F.col("entity_label").alias("ea")
-    )
-    lb = lab.select(
-        F.col("node").alias("node_b"), F.col("entity_label").alias("eb")
-    )
-    labeled = (
-        pairs.join(la, "node_a")
-        .join(lb, "node_b")
-        .select(
-            "node_a", "node_b", (F.col("ea") == F.col("eb")).alias("is_match")
-        )
+    labeled = pair_sides(pairs, _fixture_labels(spark)).select(
+        "node_a",
+        "node_b",
+        (F.col("entity_label_a") == F.col("entity_label_b")).alias("is_match"),
     )
     params = fs_params(feats, labeled)
     return feats, params, keyed
@@ -4683,10 +4433,8 @@ def q_er_fs_scored(spark, sf_dir):
 
 def _fs_sql_prefix() -> str:
     from ..resolution.fs import fs_features_sql, fs_params_sql
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
+    from .er_oracle import blocks_ctes, cpairs_ctes
 
-    cfg = ERConfig()
     names, truth = _name_f1_fixture()
     ntruth = sorted({(n, e) for _m, e, n in truth})
     truth_vals = ", ".join(
@@ -4696,11 +4444,7 @@ def _fs_sql_prefix() -> str:
     feats = fs_features_sql("cpairs", "names", "blocks").strip().rstrip()
     return f"""
 with {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes()},
 {feats},
 ntruth(node, entity_label) as (values {truth_vals}),
 labeled as (select f.node_a, f.node_b, f.f_exact, f.f_phon, f.f_jac,
@@ -4764,19 +4508,13 @@ def q_er_fs_em(spark, sf_dir):
 
 def _sql_er_fs_em() -> str:
     from ..resolution.fs import fs_em_sql, fs_features_sql
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
+    from .er_oracle import blocks_ctes, cpairs_ctes
 
-    cfg = ERConfig()
     names, _truth = _name_f1_fixture()
     feats = fs_features_sql("cpairs", "names", "blocks").strip()
     return f"""
 with {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes()},
 {feats},
 {fs_em_sql('feats')}
 """
@@ -4803,10 +4541,8 @@ def _sql_er_fs_em_scored() -> str:
         fs_em_sql,
         fs_features_sql,
     )
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
+    from .er_oracle import blocks_ctes, cpairs_ctes
 
-    cfg = ERConfig()
     names, _truth = _name_f1_fixture()
     feats = fs_features_sql("cpairs", "names", "blocks").strip()
     # fs_em_sql ends with its own select — keep only its CTE list and
@@ -4819,11 +4555,7 @@ def _sql_er_fs_em_scored() -> str:
     dec = fs_decision_sql("fs_weight")
     return f"""
 with {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes()},
 {feats},
 {em_ctes}
 select node_a, node_b, f_exact, f_phon, f_jac, f_lev, fs_weight,
@@ -4903,30 +4635,15 @@ SQL_ER_CLUSTER_REPAIR = _sql_er_cluster_repair()
 # fragments score_sql composes.  This is the audit surface a deployment needs when a
 # reviewer asks why two records were (or weren't) linked. -------------------
 def q_er_score_explain(spark, sf_dir):
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
     from ..resolution.scoring import explain_pairs
-    from .er_pipeline import ERConfig, er_key_col
+    from .er_pipeline import ERConfig, name_pairs
 
     cfg = ERConfig()
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, _ = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        .localCheckpoint(eager=False)
-    )
-    blocks = all_blocks(keyed, cfg.blocking)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
-    ka = keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a"))
-    kb = keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b"))
+    keyed = _fixture_keyed(spark)
+    _, pairs = name_pairs(keyed, cfg)
     feats = ["jw", "lev", "token_jaccard", "coverage", "contradiction", "expansion"]
     return explain_pairs(
-        pairs.join(ka, "node_a").join(kb, "node_b"), "key_a", "key_b", cfg.scoring
+        pair_sides(pairs, keyed), "key_a", "key_b", cfg.scoring
     ).select(
         "node_a",
         "node_b",
@@ -4944,7 +4661,7 @@ def _sql_er_score_explain() -> str:
         jw_sql,
         lev_sql,
     )
-    from .er_oracle import blocks_ctes
+    from .er_oracle import blocks_ctes, cpairs_ctes
     from .er_pipeline import ERConfig
 
     cfg = ERConfig()
@@ -4952,11 +4669,7 @@ def _sql_er_score_explain() -> str:
     ka, kb = "ka.key", "kb.key"
     return f"""
 with {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node)
+{cpairs_ctes(cfg)}
 select node_a, node_b,
        round({jw_sql(ka, kb)}, 6) as jw,
        round({lev_sql(ka, kb)}, 6) as lev,
@@ -4987,50 +4700,14 @@ TAU_SWEEP = [0.50, 0.60, 0.65, 0.70, 0.75, 0.80, 0.90]
 
 
 def q_er_threshold_sweep(spark, sf_dir):
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
-    from .er_pipeline import ERConfig, er_key_col
+    from .er_pipeline import ERConfig, name_pairs
 
     cfg = ERConfig()
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, truth = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        # feeds blocking plus both pair-side key joins
-        .localCheckpoint(eager=False)
-    )
-    blocks = all_blocks(keyed, cfg.blocking)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
-    ka = keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a"))
-    kb = keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b"))
-    tn = truth.select("entity_label", "normalized").distinct()
-    a, b = tn.alias("a"), tn.alias("b")
-    tpairs = (
-        a.join(
-            b,
-            (F.col("a.entity_label") == F.col("b.entity_label"))
-            & (F.col("a.normalized") < F.col("b.normalized")),
-        )
-        .select(
-            F.col("a.normalized").alias("node_a"),
-            F.col("b.normalized").alias("node_b"),
-        )
-        .distinct()
-        # feeds the is_true label join + the n_true aggregate
-        .localCheckpoint(eager=False)
-    )
+    keyed = _fixture_keyed(spark)
+    _, pairs = name_pairs(keyed, cfg)
+    tpairs = _fixture_true_pairs(spark)
     labeled = (
-        score_pairs(
-            pairs.join(ka, "node_a").join(kb, "node_b"),
-            "key_a",
-            "key_b",
-            cfg.scoring,
-        )
+        score_pairs(pair_sides(pairs, keyed), "key_a", "key_b", cfg.scoring)
         .select("node_a", "node_b", "score")
         .join(
             tpairs.withColumn("is_true", F.lit(True)),
@@ -5073,16 +4750,12 @@ def q_er_threshold_sweep(spark, sf_dir):
 
 
 def _sql_er_threshold_sweep() -> str:
-    from .er_oracle import blocks_ctes
+    from .er_oracle import blocks_ctes, cpairs_ctes
     from .er_pipeline import ERConfig
 
     cfg = ERConfig()
-    names, truth = _name_f1_fixture()
-    tn = sorted({(e, n) for _m, e, n in truth})
-    tn_vals = ", ".join(
-        "('" + e.replace("'", "''") + "', '" + n.replace("'", "''") + "')"
-        for e, n in tn
-    )
+    names, _truth = _name_f1_fixture()
+    tn_vals = _fixture_tn_vals()
     tau_vals = ", ".join(f"({t})" for t in TAU_SWEEP)
     return f"""
 with {blocks_ctes(names)},
@@ -5090,11 +4763,7 @@ tn(entity_label, normalized) as (values {tn_vals}),
 tpairs as materialized (select distinct a.normalized as node_a, b.normalized as node_b
           from tn a join tn b
           on a.entity_label = b.entity_label and a.normalized < b.normalized),
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes(cfg)},
 scored as materialized (
   select c.node_a, c.node_b,
          {score_sql('ka.key', 'kb.key', cfg.scoring)} as score,
@@ -5188,33 +4857,13 @@ LABEL_QUEUE_K = 20
 def q_er_label_queue(spark, sf_dir):
     from pyspark.sql import Window
 
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
-    from .er_pipeline import ERConfig, er_key_col
+    from .er_pipeline import ERConfig, name_pairs
 
     cfg = ERConfig()
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, _ = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        .localCheckpoint(eager=False)
-    )
-    blocks = all_blocks(keyed, cfg.blocking)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
-    ka = keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a"))
-    kb = keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b"))
+    keyed = _fixture_keyed(spark)
+    _, pairs = name_pairs(keyed, cfg)
     scored = (
-        score_pairs(
-            pairs.join(ka, "node_a").join(kb, "node_b"),
-            "key_a",
-            "key_b",
-            cfg.scoring,
-        )
+        score_pairs(pair_sides(pairs, keyed), "key_a", "key_b", cfg.scoring)
         .select("node_a", "node_b", "score")
         .withColumn(
             "uncertainty", F.abs(F.col("score") - F.lit(cfg.scoring.threshold))
@@ -5234,18 +4883,14 @@ def q_er_label_queue(spark, sf_dir):
 
 
 def _sql_er_label_queue() -> str:
-    from .er_oracle import blocks_ctes
+    from .er_oracle import blocks_ctes, cpairs_ctes
     from .er_pipeline import ERConfig
 
     cfg = ERConfig()
     names, _truth = _name_f1_fixture()
     return f"""
 with {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes(cfg)},
 scored as (select node_a, node_b,
                   {score_sql('ka.key', 'kb.key', cfg.scoring)} as score
            from cpairs join names ka on ka.node = cpairs.node_a
@@ -5358,34 +5003,13 @@ SQL_ER_RESOLUTION_DIFF = _sql_er_resolution_diff()
 # corpus-level distribution.  Mirrors the full resolve pipeline, then
 # aggregates the surviving edges per component. -----------------------------
 def q_er_cluster_confidence(spark, sf_dir):
-    from .. import corpus
-    from ..operators.entities import distinct_mention_names
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
-    from .er_pipeline import ERConfig, er_key_col
+    from .er_pipeline import ERConfig, _pair_edges, name_pairs
 
     cfg = ERConfig()
-    c = corpus.generate(n_docs=120, seed=42)
-    docs, _ = corpus.to_spark(spark, c)
-    keyed = (
-        distinct_mention_names(docs)
-        .select("node", er_key_col(F.col("node")).alias("key"))
-        .localCheckpoint(eager=False)
-    )
-    blocks = all_blocks(keyed, cfg.blocking)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
-    ka = keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a"))
-    kb = keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b"))
+    keyed = _fixture_keyed(spark)
+    _, pairs = name_pairs(keyed, cfg)
     edges = (
-        score_pairs(
-            pairs.join(ka, "node_a").join(kb, "node_b"),
-            "key_a",
-            "key_b",
-            cfg.scoring,
-        )
-        .where(F.col("score") >= cfg.scoring.threshold)
+        _pair_edges(pairs, keyed, cfg)
         .select("node_a", "node_b", "score")
         # feeds connected_components (multi-round self-joins) AND the
         # per-cluster aggregate — sever the scoring lineage once
@@ -6263,6 +5887,56 @@ def _fixture_keyed(spark):
     )
 
 
+def _fixture_labels(spark):
+    """(node, entity_label): the planted truth of the fixture corpus,
+    one row per labeled name."""
+    from .. import corpus
+
+    _, truth = corpus.to_spark(spark, corpus.generate(n_docs=120, seed=42))
+    return truth.select(
+        F.col("normalized").alias("node"), "entity_label"
+    ).distinct()
+
+
+def _fixture_true_pairs(spark):
+    """(node_a, node_b), node_a < node_b: every fixture name pair that
+    shares an entity label — the truth side of the recall and sweep
+    queries (materialized: each reads it twice)."""
+    lab = _fixture_labels(spark)
+    a, b = lab.alias("a"), lab.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.entity_label") == F.col("b.entity_label"))
+            & (F.col("a.node") < F.col("b.node")),
+        )
+        .select(F.col("a.node").alias("node_a"), F.col("b.node").alias("node_b"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _true_pair_families(spark, cfg):
+    """(true pairs, (node_a, node_b, family)): each blocking family
+    (block-key prefix) of ``cfg`` that co-blocks a true fixture pair in
+    the engine's block table."""
+    from .er_pipeline import name_pairs
+
+    blocks, _ = name_pairs(_fixture_keyed(spark), cfg)
+    tpairs = _fixture_true_pairs(spark)
+    ba = blocks.select(F.col("node").alias("node_a"), "block_key")
+    bb = blocks.select(F.col("node").alias("node_b"), "block_key")
+    fam = (
+        tpairs.join(ba, "node_a")
+        .join(bb, ["node_b", "block_key"])
+        .select(
+            "node_a", "node_b", F.substring("block_key", 1, 1).alias("family")
+        )
+        .distinct()
+    )
+    return tpairs, fam
+
+
 def q_er_block_tokens(spark, sf_dir):
     from ..resolution.blocking import token_blocks
 
@@ -6492,34 +6166,22 @@ from g where len(grams) > 0
 # Jaro-Winkler; micro-unit quantization makes both engines' sums exact
 # (resolution/scoring.tfidf_cosine_scores).
 def q_er_tfidf_cosine(spark, sf_dir):
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
     from ..resolution.scoring import tfidf_cosine_scores
-    from .er_pipeline import ERConfig
+    from .er_pipeline import name_pairs
 
-    cfg = ERConfig()
     keyed = _fixture_keyed(spark)
-    blocks = all_blocks(keyed, cfg.blocking).localCheckpoint(eager=False)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
+    _, pairs = name_pairs(keyed)
     return tfidf_cosine_scores(pairs, keyed)
 
 
 def _sql_er_tfidf_cosine() -> str:
     from ..resolution.scoring import tfidf_cosine_sql
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
+    from .er_oracle import blocks_ctes, cpairs_ctes
 
-    cfg = ERConfig()
     names, _truth = _name_f1_fixture()
     return f"""
 with {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes()},
 {tfidf_cosine_sql('cpairs', 'names')}
 """
 
@@ -6743,17 +6405,7 @@ def q_er_progressive(spark, sf_dir):
         .groupBy("node_a", "node_b")
         .agg(F.min("n").cast("long").alias("msize"))
     )
-    scored = score_pairs(
-        pairs.join(
-            keyed.select(F.col("node").alias("node_a"), F.col("key").alias("ka")),
-            "node_a",
-        ).join(
-            keyed.select(F.col("node").alias("node_b"), F.col("key").alias("kb")),
-            "node_b",
-        ),
-        "ka",
-        "kb",
-    ).select(
+    scored = score_pairs(pair_sides(pairs, keyed), "key_a", "key_b").select(
         "msize", "node_a", "node_b",
         (F.col("score") >= cfg.scoring.threshold).cast("long").alias("is_match"),
     )
@@ -7137,46 +6789,34 @@ select gram, df from dfv order by df desc, gram limit {NGRAM_TOPK}
 TFIDF_TAU = 0.7
 
 
-def q_er_resolve_tfidf(spark, sf_dir):
-    from ..resolution.blocking import all_blocks
-    from ..resolution.clustering import connected_components
-    from ..resolution.pairs import candidate_pairs
-    from ..resolution.scoring import tfidf_cosine_scores
-    from .er_pipeline import ERConfig
+def _fixture_resolve_by(spark, scores, col: str, tau: float):
+    """Cluster the fixture names over the engine's candidate grid with
+    ``scores(pairs, keyed)[col] >= tau`` as the match decision — the
+    matcher swaps of the flagship ensemble score."""
+    from .er_pipeline import name_pairs
 
-    cfg = ERConfig()
     keyed = _fixture_keyed(spark)
-    blocks = all_blocks(keyed, cfg.blocking).localCheckpoint(eager=False)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
+    _, pairs = name_pairs(keyed)
     edges = (
-        tfidf_cosine_scores(pairs, keyed)
-        .where(F.col("cos") >= TFIDF_TAU)
-        .select("node_a", "node_b")
+        scores(pairs, keyed).where(F.col(col) >= tau).select("node_a", "node_b")
     )
     return connected_components(edges, nodes=keyed.select("node")).select(
         "node", "cluster"
     )
 
 
-def _sql_er_resolve_tfidf() -> str:
-    from ..resolution.scoring import tfidf_cosine_ctes
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
+def _sql_resolve_by(score_ctes: str, scores: str, col: str, tau: float) -> str:
+    """Oracle of ``_fixture_resolve_by``: ``score_ctes`` over ``cpairs``
+    ending in ``scores``, thresholded, then recursive-CTE components."""
+    from .er_oracle import blocks_ctes, cpairs_ctes
 
-    cfg = ERConfig()
     names, _truth = _name_f1_fixture()
     return f"""
 with recursive {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
-{tfidf_cosine_ctes('cpairs', 'names')},
-medges as materialized (select node_a, node_b from tfscores
-                        where cos >= {TFIDF_TAU}),
+{cpairs_ctes()},
+{score_ctes},
+medges as materialized (select node_a, node_b from {scores}
+                        where {col} >= {tau}),
 eedges as materialized (select node_a as u, node_b as v from medges
                         union all
                         select node_b as u, node_a as v from medges),
@@ -7189,6 +6829,20 @@ clusters as (select n.node,
              group by n.node)
 select node, cluster from clusters
 """
+
+
+def q_er_resolve_tfidf(spark, sf_dir):
+    from ..resolution.scoring import tfidf_cosine_scores
+
+    return _fixture_resolve_by(spark, tfidf_cosine_scores, "cos", TFIDF_TAU)
+
+
+def _sql_er_resolve_tfidf() -> str:
+    from ..resolution.scoring import tfidf_cosine_ctes
+
+    return _sql_resolve_by(
+        tfidf_cosine_ctes("cpairs", "names"), "tfscores", "cos", TFIDF_TAU
+    )
 
 
 SQL_ER_RESOLVE_TFIDF = _sql_er_resolve_tfidf()
@@ -7204,34 +6858,22 @@ ME_TAU = 0.9
 
 
 def q_er_monge_elkan(spark, sf_dir):
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
     from ..resolution.scoring import monge_elkan_scores
-    from .er_pipeline import ERConfig
+    from .er_pipeline import name_pairs
 
-    cfg = ERConfig()
     keyed = _fixture_keyed(spark)
-    blocks = all_blocks(keyed, cfg.blocking).localCheckpoint(eager=False)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
+    _, pairs = name_pairs(keyed)
     return monge_elkan_scores(pairs, keyed)
 
 
 def _sql_er_monge_elkan() -> str:
     from ..resolution.scoring import monge_elkan_sql
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
+    from .er_oracle import blocks_ctes, cpairs_ctes
 
-    cfg = ERConfig()
     names, _truth = _name_f1_fixture()
     return f"""
 with {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes()},
 {monge_elkan_sql('cpairs', 'names')}
 """
 
@@ -7245,34 +6887,22 @@ SQL_ER_MONGE_ELKAN = _sql_er_monge_elkan()
 # the hybrid-scorer family beside hard TF-IDF and Monge-Elkan
 # (resolution/scoring.soft_tfidf_scores).
 def q_er_soft_tfidf(spark, sf_dir):
-    from ..resolution.blocking import all_blocks
-    from ..resolution.pairs import candidate_pairs
     from ..resolution.scoring import soft_tfidf_scores
-    from .er_pipeline import ERConfig
+    from .er_pipeline import name_pairs
 
-    cfg = ERConfig()
     keyed = _fixture_keyed(spark)
-    blocks = all_blocks(keyed, cfg.blocking).localCheckpoint(eager=False)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
+    _, pairs = name_pairs(keyed)
     return soft_tfidf_scores(pairs, keyed)
 
 
 def _sql_er_soft_tfidf() -> str:
     from ..resolution.scoring import soft_tfidf_sql
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
+    from .er_oracle import blocks_ctes, cpairs_ctes
 
-    cfg = ERConfig()
     names, _truth = _name_f1_fixture()
     return f"""
 with {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
+{cpairs_ctes()},
 {soft_tfidf_sql('cpairs', 'names')}
 """
 
@@ -7287,57 +6917,17 @@ SOFT_TAU = 0.85
 
 
 def q_er_resolve_soft(spark, sf_dir):
-    from ..resolution.blocking import all_blocks
-    from ..resolution.clustering import connected_components
-    from ..resolution.pairs import candidate_pairs
     from ..resolution.scoring import soft_tfidf_scores
-    from .er_pipeline import ERConfig
 
-    cfg = ERConfig()
-    keyed = _fixture_keyed(spark)
-    blocks = all_blocks(keyed, cfg.blocking).localCheckpoint(eager=False)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
-    edges = (
-        soft_tfidf_scores(pairs, keyed)
-        .where(F.col("soft") >= SOFT_TAU)
-        .select("node_a", "node_b")
-    )
-    return connected_components(edges, nodes=keyed.select("node")).select(
-        "node", "cluster"
-    )
+    return _fixture_resolve_by(spark, soft_tfidf_scores, "soft", SOFT_TAU)
 
 
 def _sql_er_resolve_soft() -> str:
     from ..resolution.scoring import soft_tfidf_ctes
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
 
-    cfg = ERConfig()
-    names, _truth = _name_f1_fixture()
-    return f"""
-with recursive {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
-{soft_tfidf_ctes('cpairs', 'names')},
-medges as materialized (select node_a, node_b from softscores
-                        where soft >= {SOFT_TAU}),
-eedges as materialized (select node_a as u, node_b as v from medges
-                        union all
-                        select node_b as u, node_a as v from medges),
-reach(u, v) as (select u, v from eedges
-                union
-                select r.u, e.v from reach r join eedges e on r.v = e.u),
-clusters as (select n.node,
-                    least(n.node, coalesce(min(r.v), n.node)) as cluster
-             from names n left join reach r on r.u = n.node
-             group by n.node)
-select node, cluster from clusters
-"""
+    return _sql_resolve_by(
+        soft_tfidf_ctes("cpairs", "names"), "softscores", "soft", SOFT_TAU
+    )
 
 
 SQL_ER_RESOLVE_SOFT = _sql_er_resolve_soft()
@@ -7347,57 +6937,17 @@ SQL_ER_RESOLVE_SOFT = _sql_er_resolve_soft()
 # flagship, match edges from symmetric Monge-Elkan ≥ ME_TAU, same
 # recursive-CTE-mirrored connected components.
 def q_er_resolve_me(spark, sf_dir):
-    from ..resolution.blocking import all_blocks
-    from ..resolution.clustering import connected_components
-    from ..resolution.pairs import candidate_pairs
     from ..resolution.scoring import monge_elkan_scores
-    from .er_pipeline import ERConfig
 
-    cfg = ERConfig()
-    keyed = _fixture_keyed(spark)
-    blocks = all_blocks(keyed, cfg.blocking).localCheckpoint(eager=False)
-    pairs = candidate_pairs(
-        blocks, cfg.max_block_size, cfg.n_salt, cfg.salt_threshold
-    )
-    edges = (
-        monge_elkan_scores(pairs, keyed)
-        .where(F.col("me") >= ME_TAU)
-        .select("node_a", "node_b")
-    )
-    return connected_components(edges, nodes=keyed.select("node")).select(
-        "node", "cluster"
-    )
+    return _fixture_resolve_by(spark, monge_elkan_scores, "me", ME_TAU)
 
 
 def _sql_er_resolve_me() -> str:
     from ..resolution.scoring import monge_elkan_ctes
-    from .er_oracle import blocks_ctes
-    from .er_pipeline import ERConfig
 
-    cfg = ERConfig()
-    names, _truth = _name_f1_fixture()
-    return f"""
-with recursive {blocks_ctes(names)},
-bsz as (select block_key, count(*) as n from blocks group by block_key),
-cpairs as (select distinct a.node as node_a, b.node as node_b
-           from blocks a join blocks b using (block_key)
-                         join bsz using (block_key)
-           where n <= {cfg.max_block_size} and a.node < b.node),
-{monge_elkan_ctes('cpairs', 'names')},
-medges as materialized (select node_a, node_b from mescores
-                        where me >= {ME_TAU}),
-eedges as materialized (select node_a as u, node_b as v from medges
-                        union all
-                        select node_b as u, node_a as v from medges),
-reach(u, v) as (select u, v from eedges
-                union
-                select r.u, e.v from reach r join eedges e on r.v = e.u),
-clusters as (select n.node,
-                    least(n.node, coalesce(min(r.v), n.node)) as cluster
-             from names n left join reach r on r.u = n.node
-             group by n.node)
-select node, cluster from clusters
-"""
+    return _sql_resolve_by(
+        monge_elkan_ctes("cpairs", "names"), "mescores", "me", ME_TAU
+    )
 
 
 SQL_ER_RESOLVE_ME = _sql_er_resolve_me()

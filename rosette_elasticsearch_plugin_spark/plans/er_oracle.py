@@ -144,6 +144,17 @@ def blocks_ctes(
 )"""
 
 
+def cpairs_ctes(cfg: ERConfig = ERConfig()) -> str:
+    """CTE fragment ``bsz → cpairs`` over ``blocks``: the capped
+    candidate grid of ``er_pipeline.name_pairs`` (distinct a < b pairs
+    inside blocks of at most ``cfg.max_block_size`` members)."""
+    return f"""bsz as (select block_key, count(*) as n from blocks group by block_key),
+cpairs as (select distinct a.node as node_a, b.node as node_b
+           from blocks a join blocks b using (block_key)
+                         join bsz using (block_key)
+           where n <= {cfg.max_block_size} and a.node < b.node)"""
+
+
 def cluster_ctes(
     names: list[str],
     cfg: ERConfig = ERConfig(),

@@ -29,7 +29,7 @@ from ..resolution.clustering import (
     assign_cluster_ids,
     connected_components,
 )
-from ..resolution.pairs import candidate_pairs
+from ..resolution.pairs import candidate_pairs, pair_sides
 from ..resolution.scoring import ScoringConfig, match_edges, score_pairs
 
 
@@ -113,6 +113,18 @@ def name_match_edges(
     keyed = names.select(
         "node", er_key_col(F.col("node"), cfg.alias_names).alias("key")
     )
+    _, pairs = name_pairs(keyed, cfg)
+    return names, _pair_edges(pairs, keyed, cfg)
+
+
+def name_pairs(
+    keyed: DataFrame, cfg: ERConfig = ERConfig()
+) -> tuple[DataFrame, DataFrame]:
+    """(node, key) → ``(blocks, pairs)``: the batch candidate grid —
+    the block table (node, block_key) and the distinct candidate pairs
+    (node_a < node_b) that ``name_match_edges`` scores.  The capped +
+    salted grid by default, meta-blocking with ``cfg.meta_tau``, plus
+    the sorted-neighborhood pairs with ``cfg.snm_window``."""
     # materialize the block table once: candidate_pairs references it
     # from the size aggregate, both grid-join sides, and the hot-block
     # branch — unmaterialized, the whole metaphone-UDF + MinHash
@@ -138,7 +150,7 @@ def name_match_edges(
         pairs = pairs.unionByName(
             sorted_neighborhood_pairs(keyed, cfg.snm_window)
         ).distinct()
-    return names, _pair_edges(pairs, keyed, cfg)
+    return blocks, pairs
 
 
 def _pair_edges(pairs: DataFrame, keyed: DataFrame, cfg: ERConfig) -> DataFrame:
@@ -151,26 +163,17 @@ def _pair_edges(pairs: DataFrame, keyed: DataFrame, cfg: ERConfig) -> DataFrame:
     # once per NAME (in `keyed`), not twice per candidate pair.  The
     # name table is vocabulary-scale, so the two joins are cheap (AQE
     # broadcasts them when small).
-    pairs = pairs.join(
-        keyed.select(F.col("node").alias("node_a"), F.col("key").alias("key_a")),
-        "node_a",
-    ).join(
-        keyed.select(F.col("node").alias("node_b"), F.col("key").alias("key_b")),
-        "node_b",
+    scored = score_pairs(
+        pair_sides(pairs, keyed), "key_a", "key_b", cfg.scoring
     )
-    scored = score_pairs(pairs, "key_a", "key_b", cfg.scoring)
     return match_edges(scored, cfg.scoring)
 
 
-def resolve_names(
-    names: DataFrame,
-    cfg: ERConfig = ERConfig(),
-    cc_stats: dict | None = None,
-) -> DataFrame:
+def resolve_names(names: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
     """(node) distinct normalized names → (node, cluster).  cluster =
     lexicographic min node in the connected component; singletons map
     to themselves."""
-    return resolve_names_with_overrides(names, cfg=cfg, cc_stats=cc_stats)
+    return resolve_names_with_overrides(names, cfg=cfg)
 
 
 def _override_pairs_df(spark, pairs) -> DataFrame:
@@ -185,7 +188,6 @@ def resolve_names_with_overrides(
     must_link: list[tuple[str, str]] | None = None,
     cannot_link: list[tuple[str, str]] | None = None,
     cfg: ERConfig = ERConfig(),
-    cc_stats: dict | None = None,
 ) -> DataFrame:
     """``resolve_names`` with analyst overrides — the consumer of the
     ``er_cluster_confidence`` review queue.  ``cannot_link`` pairs are
@@ -217,9 +219,7 @@ def resolve_names_with_overrides(
             .select("node_a", "node_b")
         )
         e = e.unionByName(ml).distinct()
-    return connected_components(
-        e, nodes=names, max_iter=cfg.cc_max_iter, stats=cc_stats
-    )
+    return connected_components(e, nodes=names, max_iter=cfg.cc_max_iter)
 
 
 def override_violations(
@@ -250,7 +250,6 @@ def resolve_documents(
     gazetteer: DataFrame | None = None,
     cfg: ERConfig = ERConfig(),
     pattern: str | None = None,
-    cc_stats: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full pipeline over interleaved-span documents.
 
@@ -269,7 +268,7 @@ def resolve_documents(
     # 600k docs, local[32]).  At cluster scale the same two-pass shape
     # holds with the mention table written to storage by pass B.
     names = distinct_mention_names(docs, pat)
-    name_clusters = resolve_names(names, cfg, cc_stats=cc_stats)
+    name_clusters = resolve_names(names, cfg)
     mentions = extract_mentions(docs, gazetteer, pat)
     assigned = assign_cluster_ids(mentions, name_clusters, "normalized")
     return assigned, name_clusters

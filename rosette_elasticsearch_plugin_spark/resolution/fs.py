@@ -36,6 +36,7 @@ from ..functions.similarity import (
     token_jaccard_col,
     token_jaccard_sql,
 )
+from .pairs import pair_sides
 
 FS_JACCARD_TAU = 0.5
 FS_LEV_TAU = 0.8
@@ -53,12 +54,6 @@ def fs_features(
             reused as the phonetic-agreement feature, so no second
             metaphone pass runs.
     """
-    ka = keyed.select(
-        F.col("node").alias("node_a"), F.col("key").alias("key_a")
-    )
-    kb = keyed.select(
-        F.col("node").alias("node_b"), F.col("key").alias("key_b")
-    )
     mb = blocks.where(F.col("block_key").startswith("m:"))
     phon = (
         mb.select(F.col("node").alias("node_a"), "block_key")
@@ -71,8 +66,7 @@ def fs_features(
         .withColumn("f_phon", F.lit(True))
     )
     return (
-        pairs.join(ka, "node_a")
-        .join(kb, "node_b")
+        pair_sides(pairs, keyed)
         .join(phon, ["node_a", "node_b"], "left")
         .select(
             "node_a",

@@ -92,3 +92,19 @@ def candidate_pairs(
         )
         out = out.unionByName(star)
     return out.distinct()
+
+
+def pair_sides(pairs: DataFrame, attrs: DataFrame) -> DataFrame:
+    """``pairs`` (node_a, node_b, …) with every non-``node`` column ``c``
+    of ``attrs`` (node, …) attached once per side as ``c_a`` and
+    ``c_b`` — two node-equi joins against a vocabulary-scale table
+    (AQE broadcasts it when small).  Pairs whose node is missing from
+    ``attrs`` drop out (inner joins)."""
+    cols = [c for c in attrs.columns if c != "node"]
+    for s in ("a", "b"):
+        side = attrs.select(
+            F.col("node").alias(f"node_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in cols],
+        )
+        pairs = pairs.join(side, f"node_{s}")
+    return pairs

@@ -50,6 +50,7 @@ from ..functions.similarity import (
     token_jaccard_col,
     token_jaccard_sql,
 )
+from .pairs import pair_sides
 
 TOKEN_JW_MIN = 0.85
 
@@ -168,18 +169,6 @@ def _cover_tok(tx: list[str], ty: list[str]) -> float:
         if not any(_tok_match(t, u) for u in long_):
             return 0.0
     return 1.0
-
-
-def _expand_py(x: str, y: str) -> float:
-    return _expand_tok(sorted(x.split(" ")), sorted(y.split(" ")))
-
-
-def _contra_py(x: str, y: str) -> float:
-    return _contra_tok(sorted(x.split(" ")), sorted(y.split(" ")))
-
-
-def _cover_py(x: str, y: str) -> float:
-    return _cover_tok(sorted(x.split(" ")), sorted(y.split(" ")))
 
 
 # --- numpy-batched token-alignment features ------------------------------------
@@ -730,12 +719,8 @@ def tfidf_cosine_scores(pairs: DataFrame, names: DataFrame) -> DataFrame:
             F.sum(F.col("wa") * F.col("wb")).alias("num"),
         )
     )
-    sqa = sq.select(F.col("node").alias("node_a"), F.col("sq").alias("sq_a"))
-    sqb = sq.select(F.col("node").alias("node_b"), F.col("sq").alias("sq_b"))
     return (
-        pairs.join(shared, ["node_a", "node_b"], "left")
-        .join(sqa, "node_a")
-        .join(sqb, "node_b")
+        pair_sides(pairs.join(shared, ["node_a", "node_b"], "left"), sq)
         .select(
             "node_a",
             "node_b",
@@ -888,16 +873,8 @@ def monge_elkan_scores(pairs: DataFrame, names: DataFrame) -> DataFrame:
 
     ``names`` is the (node, key) vocabulary; the two key-attach joins
     are node-equi (AQE-planned), the kernel is one Arrow hop."""
-    ka = names.select(
-        F.col("node").alias("node_a"), F.col("key").alias("ka")
-    )
-    kb = names.select(
-        F.col("node").alias("node_b"), F.col("key").alias("kb")
-    )
-    s = (
-        pairs.join(ka, "node_a")
-        .join(kb, "node_b")
-        .withColumn("s", me_sums_udf(F.col("ka"), F.col("kb")))
+    s = pair_sides(pairs, names).withColumn(
+        "s", me_sums_udf(F.col("key_a"), F.col("key_b"))
     )
     # 6dp means via EXACT integer half-up on the micro-sum rationals,
     # not round(·, 6) on the double ratios: sa/(na·1e6) with na=2 and
@@ -1057,8 +1034,6 @@ def soft_tfidf_scores(
 
     num_a = direction("ta", "num_ab")
     num_b = direction("tb", "num_ba")
-    sqa = sq.select(F.col("node").alias("node_a"), F.col("sq").alias("sq_a"))
-    sqb = sq.select(F.col("node").alias("node_b"), F.col("sq").alias("sq_b"))
     denom = F.sqrt(F.col("sq_a").cast("double")) * F.sqrt(
         F.col("sq_b").cast("double")
     )
@@ -1069,10 +1044,12 @@ def soft_tfidf_scores(
         F.coalesce(F.col("num_ba").cast("double"), F.lit(0.0)) / denom, 6
     )
     return (
-        pairs.join(num_a, ["node_a", "node_b"], "left")
-        .join(num_b, ["node_a", "node_b"], "left")
-        .join(sqa, "node_a")
-        .join(sqb, "node_b")
+        pair_sides(
+            pairs.join(num_a, ["node_a", "node_b"], "left").join(
+                num_b, ["node_a", "node_b"], "left"
+            ),
+            sq,
+        )
         .select(
             "node_a",
             "node_b",

@@ -58,6 +58,38 @@ CLUSTERS_SCHEMA = T.StructType(
 )
 
 
+def _read_current(
+    spark: SparkSession,
+    table: SnapshotTable,
+    empty_schema: T.StructType | None = None,
+) -> DataFrame | None:
+    """``table``'s current snapshot; before its first commit, an empty
+    frame of ``empty_schema`` (``None`` without one)."""
+    snap = table.current_snapshot()
+    if snap is not None:
+        return table.read(spark, snap.snapshot_id)
+    if empty_schema is None:
+        return None
+    return spark.createDataFrame([], empty_schema)
+
+
+def _commit_batch(
+    stage_label: str, batch_id: int, *commits: tuple[SnapshotTable, DataFrame]
+) -> None:
+    """Overwrite each ``(table, df)`` in the order given, under the
+    batch's stage label.  Callers pass the clusters table LAST: its
+    commit is the batch's completion marker (a replay whose label is
+    already on the clusters table is skipped), and re-overwriting the
+    earlier tables on a replay is deterministic and idempotent."""
+    for table, df in commits:
+        table.commit(
+            df,
+            stage=stage_label,
+            metrics={"batch_id": float(batch_id)},
+            mode="overwrite",
+        )
+
+
 def resolve_stream(
     spark: SparkSession,
     input_dir: str,
@@ -104,17 +136,8 @@ def resolve_stream(
         stage_label = f"resolve-{run_id}-batch-{batch_id}"
         if table.last_snapshot_for(stage_label) is not None:
             return  # replayed batch — state already committed
-        prior_snap = table.current_snapshot()
-        if prior_snap is not None:
-            prior = table.read(spark, prior_snap.snapshot_id)
-        else:
-            prior = spark.createDataFrame([], CLUSTERS_SCHEMA)
-        idx_snap = index_table.current_snapshot()
-        prior_index = (
-            index_table.read(spark, idx_snap.snapshot_id)
-            if idx_snap is not None
-            else None
-        )
+        prior = _read_current(spark, table, CLUSTERS_SCHEMA)
+        prior_index = _read_current(spark, index_table)
         # With an empty prior every candidate pair has a new side and
         # the star edge set is empty, so batch 0 degenerates to the
         # full resolve — one code path for bootstrap and steady state.
@@ -123,20 +146,11 @@ def resolve_stream(
         clusters = incremental_resolve(prior, new_names, cfg, name_index=index)
         if stable_ids:
             clusters = stable_relabel(clusters, prior)
-        # index first, clusters last: the clusters commit's stage label
-        # is the batch's completion marker, and re-overwriting the index
-        # on a replay is deterministic and idempotent
-        index_table.commit(
-            index.select("node", "key", "block_key"),
-            stage=stage_label,
-            metrics={"batch_id": float(batch_id)},
-            mode="overwrite",
-        )
-        table.commit(
-            clusters.select("node", "cluster"),
-            stage=stage_label,
-            metrics={"batch_id": float(batch_id)},
-            mode="overwrite",
+        _commit_batch(
+            stage_label,
+            batch_id,
+            (index_table, index.select("node", "key", "block_key")),
+            (table, clusters.select("node", "cluster")),
         )
 
     writer = stream.writeStream.foreachBatch(sink).option(
@@ -220,24 +234,9 @@ def resolve_cdc_stream(
         stage_label = f"cdc-resolve-{run_id}-batch-{batch_id}"
         if table.last_snapshot_for(stage_label) is not None:
             return  # replayed batch — state already committed
-        prior_snap = table.current_snapshot()
-        prior = (
-            table.read(spark, prior_snap.snapshot_id)
-            if prior_snap is not None
-            else spark.createDataFrame([], CLUSTERS_SCHEMA)
-        )
-        idx_snap = index_table.current_snapshot()
-        prior_index = (
-            index_table.read(spark, idx_snap.snapshot_id)
-            if idx_snap is not None
-            else None
-        )
-        cnt_snap = counts_table.current_snapshot()
-        counts = (
-            counts_table.read(spark, cnt_snap.snapshot_id)
-            if cnt_snap is not None
-            else spark.createDataFrame([], COUNTS_SCHEMA)
-        )
+        prior = _read_current(spark, table, CLUSTERS_SCHEMA)
+        prior_index = _read_current(spark, index_table)
+        counts = _read_current(spark, counts_table, COUNTS_SCHEMA)
 
         delta = batch_df.groupBy("node").agg(
             F.sum(
@@ -268,25 +267,17 @@ def resolve_cdc_stream(
         clusters = incremental_resolve(prior, appeared, cfg, name_index=index)
         clusters = retract_names(clusters, vanished, cfg, name_index=index)
 
-        counts_table.commit(
-            merged.where(F.col("new_n") > 0).select(
-                "node", F.col("new_n").alias("n")
+        _commit_batch(
+            stage_label,
+            batch_id,
+            (
+                counts_table,
+                merged.where(F.col("new_n") > 0).select(
+                    "node", F.col("new_n").alias("n")
+                ),
             ),
-            stage=stage_label,
-            metrics={"batch_id": float(batch_id)},
-            mode="overwrite",
-        )
-        index_table.commit(
-            index.select("node", "key", "block_key"),
-            stage=stage_label,
-            metrics={"batch_id": float(batch_id)},
-            mode="overwrite",
-        )
-        table.commit(
-            clusters.select("node", "cluster"),
-            stage=stage_label,
-            metrics={"batch_id": float(batch_id)},
-            mode="overwrite",
+            (index_table, index.select("node", "key", "block_key")),
+            (table, clusters.select("node", "cluster")),
         )
 
     writer = stream.writeStream.foreachBatch(sink).option(

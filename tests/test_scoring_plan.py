@@ -91,10 +91,15 @@ def _search_df(spark):
         _registry("q_er_scored_pairs"),
         _registry("q_er_match_edges"),
         _registry("q_er_score_explain"),
+        _registry("q_er_threshold_sweep"),
+        _registry("q_er_label_queue"),
+        _registry("q_er_cross_link"),
+        _registry("q_er_one_to_one"),
         _search_df,
     ],
     ids=["pair_edges", "er_scored_pairs", "er_match_edges",
-         "er_score_explain", "search_names"],
+         "er_score_explain", "er_threshold_sweep", "er_label_queue",
+         "er_cross_link", "er_one_to_one", "search_names"],
 )
 def test_scoring_runs_kernel_once(spark, no_codegen_fallback, build):
     df = build(spark)
